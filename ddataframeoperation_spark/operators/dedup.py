@@ -561,6 +561,12 @@ def connected_components(
     """
     from pyspark.sql import functions as SF
 
+    # Validated first: the block kernel and the small-graph endgame return
+    # early, and a bad argument must raise whatever the graph size.
+    if on_nonconverged not in ("raise", "warn"):
+        raise ValueError(
+            f"on_nonconverged must be 'raise' or 'warn', got {on_nonconverged!r}"
+        )
     if block_col is not None:
         return _cc_block_kernel(pairs, block_col)
 
@@ -652,10 +658,6 @@ def connected_components(
         .distinct()
         .withColumn("component", SF.col("id"))
     )
-    if on_nonconverged not in ("raise", "warn"):
-        raise ValueError(
-            f"on_nonconverged must be 'raise' or 'warn', got {on_nonconverged!r}"
-        )
     converged = False
     for _ in range(max_iterations):
         # Hook as ONE aggregation (r13, guide §2.4): the neighbor
@@ -968,11 +970,11 @@ def jaccard_refine(
     same 4dp rounding) — but the corpus-wide inverted-index self-join
     never runs. Candidate rows whose ids are absent from ``df`` drop
     (inner joins), duplicates collapse, and NULL-id rows drop — the
-    semi-join form's behavior. Candidates are additionally restricted
-    to ``id_a < id_b`` (ADVICE r13): the inverted-index form only ever
-    emits ordered pairs, so a reversed or self-pair candidate must
-    score NOTHING for the documented identity to hold for ANY
-    candidate list, not just minhash_candidates' ordered output.
+    semi-join form's behavior. Each candidate is first reoriented to
+    ``(least, greatest)``: the inverted-index form only ever emits
+    ordered pairs, so a reversed candidate ``(b, a)`` scores as its
+    ordered twin ``(a, b)`` (Jaccard is symmetric) and collapses with it,
+    and a self-pair scores nothing.
 
     Returns (id_a, id_b, jacc).
     """
@@ -984,7 +986,10 @@ def jaccard_refine(
         F.col(id_col).alias("_id"), F.array_distinct(units).alias("_set")
     )
     cand = (
-        candidates.select("id_a", "id_b")
+        candidates.select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )

@@ -1134,8 +1134,8 @@ def matryoshka_recall(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    if not dims or any(d < 1 for d in dims):
-        raise ValueError("dims must be non-empty positive prefix lengths")
+    if not dims or any(d < 1 for d in dims) or len(set(dims)) != len(dims):
+        raise ValueError("dims must be non-empty distinct positive prefix lengths")
     from pyspark.sql import Window
 
     qb = F.broadcast(

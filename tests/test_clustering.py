@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from ddataframeoperation_spark.operators import dedup
 
 
@@ -90,3 +92,11 @@ def test_full_neardup_pipeline(spark):
     pairs = dedup.minhash_candidates(docs)
     out = sorted(r["doc_id"] for r in dedup.cluster_dedup(docs, pairs).collect())
     assert out == [1, 4]
+
+
+def test_connected_components_rejects_bad_mode_on_small_graph(spark):
+    # The small-graph endgame returns early; the argument check must still
+    # run before it.
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="on_nonconverged"):
+        dedup.connected_components(pairs, on_nonconverged="bogus")

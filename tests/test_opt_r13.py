@@ -153,6 +153,30 @@ def test_jaccard_refine_matches_semijoined_pairs(spark):
     assert len(n) > 0
 
 
+def test_jaccard_refine_scores_reversed_pair_as_its_twin(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog today"),
+            (2, "the quick brown fox jumps over the lazy dog today!"),
+            (3, "the quick brown fox leaps over the lazy dog today"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def refine(pairs):
+        cands = spark.createDataFrame(pairs, "id_a long, id_b long")
+        return sorted(
+            map(tuple, dedup.jaccard_refine(docs, cands, threshold=0.3).collect())
+        )
+
+    ordered = refine([(1, 2), (1, 3)])
+    assert len(ordered) == 2
+    # Reversed candidates score as their ordered twins, reported (lo, hi);
+    # a pair given both ways collapses to one row; a self-pair scores nothing.
+    assert refine([(2, 1), (3, 1)]) == ordered
+    assert refine([(1, 2), (2, 1), (3, 1), (3, 3)]) == ordered
+
+
 def test_pagerank_kernel_matches_iterative(spark):
     rng = random.Random(42)
     node_ids = list(range(30))

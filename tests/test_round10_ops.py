@@ -358,6 +358,8 @@ def test_matryoshka_recall_validates(spark):
         matryoshka_recall(df, q, dims=[1], k=0)
     with _pytest.raises(ValueError, match="dims"):
         matryoshka_recall(df, q, dims=[], k=1)
+    with _pytest.raises(ValueError, match="distinct"):
+        matryoshka_recall(df, q, dims=[1, 2, 1], k=1)
 
 
 # ---------------------------------------------------- dedup_token_savings
