@@ -1664,7 +1664,6 @@ def triangle_count(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    block_col: str | None = None,
 ) -> DataFrame:
     """B32 adjunct — global triangle census of an undirected similarity
     graph (e.g. the near-dup pair set): one row of
@@ -1690,22 +1689,7 @@ def triangle_count(
 
     Returns one row: (n_edges, n_wedges, n_triangles). Self-loops are
     dropped; duplicate/reversed input pairs collapse.
-
-    ``block_col`` (r14 optimization, the :func:`common_neighbor_pairs`
-    blocked-matmul pattern): when every pair row carries a blocking key
-    and no node spans blocks (true for pair lists built by a blocked
-    generator — e.g. intra-fingerprint-group pairs), every edge, wedge
-    and triangle lives inside one block, so the census decomposes into
-    per-block counts summed at the end: ONE grouped Arrow kernel
-    (oriented 0/1 adjacency U per block; wedges = Σ C(outdeg, 2),
-    triangles = Σ (U·U)∘U — exact integers in float64, ≪ 2^53) replaces
-    the Σdeg² wedge self-join + semi-join. Identical one-row output.
-    Blocked-kernel contract: one BLOCK's adjacency is dense in one task
-    (same caller-known boundedness as the jaccard/common-neighbor
-    kernels); the wedge join stays the unblocked/100 TB default.
     """
-    if block_col is not None:
-        return _triangle_block_kernel(pairs, a_col, b_col, block_col)
     e = (
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("lo"),
@@ -1728,71 +1712,6 @@ def triangle_count(
         closed.agg(F.count("*").cast("long").alias("n_triangles"))
     )
     return stats
-
-
-def _triangle_block_kernel(
-    pairs: DataFrame, a_col: str, b_col: str, block_col: str
-) -> DataFrame:
-    """Blocked triangle census (see :func:`triangle_count`): one grouped
-    Arrow kernel per block over the oriented (lo < hi) 0/1 adjacency,
-    per-block (n_edges, n_wedges, n_triangles) summed to the one-row
-    global census. Self-loops dropped, duplicate/reversed pairs
-    collapsed and NULL endpoints skipped exactly as on the join path."""
-    import numpy as np
-    import pandas as pd
-
-    edges = pairs.select(
-        F.col(a_col).alias("id_a"),
-        F.col(b_col).alias("id_b"),
-        F.col(block_col).alias("_blk"),
-    ).filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        zero = pd.DataFrame(
-            {"n_edges": [0], "n_wedges": [0], "n_triangles": [0]}
-        )
-        if len(pdf) == 0:
-            return zero
-        a = pdf["id_a"].to_numpy()
-        b = pdf["id_b"].to_numpy()
-        ids = np.unique(np.concatenate([a, b]))
-        n = len(ids)
-        ia = np.searchsorted(ids, a)
-        ib = np.searchsorted(ids, b)
-        lo = np.minimum(ia, ib)
-        hi = np.maximum(ia, ib)
-        keep = lo < hi  # drop self-loops
-        code = np.unique(lo[keep].astype(np.int64) * n + hi[keep])
-        if len(code) == 0:
-            return zero
-        U = np.zeros((n, n), dtype=np.float64)
-        U[code // n, code % n] = 1.0
-        outdeg = U.sum(axis=1).astype(np.int64)
-        wedges = int((outdeg * (outdeg - 1) // 2).sum())
-        tri = int(((U @ U) * U).sum())
-        return pd.DataFrame(
-            {
-                "n_edges": [len(code)],
-                "n_wedges": [wedges],
-                "n_triangles": [tri],
-            }
-        )
-
-    from ddataframeoperation_spark.operators.script import apply_script_grouped
-
-    per_block = apply_script_grouped(
-        edges, ["_blk"], kernel,
-        "n_edges long, n_wedges long, n_triangles long",
-    )
-    # coalesce: zero blocks (empty pair list) must still yield the one
-    # all-zero census row the join path's count aggregates produce.
-    return per_block.agg(
-        F.coalesce(F.sum("n_edges"), F.lit(0)).cast("long").alias("n_edges"),
-        F.coalesce(F.sum("n_wedges"), F.lit(0)).cast("long").alias("n_wedges"),
-        F.coalesce(F.sum("n_triangles"), F.lit(0))
-        .cast("long")
-        .alias("n_triangles"),
-    )
 
 
 def containment_pairs(

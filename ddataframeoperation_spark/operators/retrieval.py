@@ -204,7 +204,10 @@ def mmr_diversify(
     NULL is dropped before selection (no vector → no redundancy
     penalty is computable; without the NULL filter the Arrow kernel
     would throw mid-job on ``np.asarray(None)``) — so fewer than ``k``
-    rows can come back for a query. Candidate (query, id) pairs are
+    rows can come back for a query. A candidate with a NULL relevance
+    score is kept but ranks after every scored candidate, NULLs ordered
+    by smaller id, whatever the row order (the NULLs-last convention of
+    the engine's top-k). Candidate (query, id) pairs are
     assumed unique (the upstream top-k contract); duplicates would be
     selected independently. The greedy loop runs in
     an Arrow-batched ``applyInPandas`` kernel per query — O(N²)
@@ -235,6 +238,7 @@ def mmr_diversify(
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         ids = pdf[id_col].to_numpy()
         rel = pdf[score_col].to_numpy(dtype=np.float64)
+        scored = ~np.isnan(rel)
         emb = np.asarray(
             [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
         )
@@ -247,7 +251,8 @@ def mmr_diversify(
             best_i, best_key = None, None
             for i in remaining:
                 pen = max((sims[i][j] for j in chosen), default=0.0)
-                key = (lamb * rel[i] - (1.0 - lamb) * pen, -int(ids[i]))
+                mmr = lamb * rel[i] - (1.0 - lamb) * pen if scored[i] else 0.0
+                key = (bool(scored[i]), mmr, -int(ids[i]))
                 if best_key is None or key > best_key:
                     best_i, best_key = i, key
             chosen.append(best_i)

@@ -10430,12 +10430,10 @@ def b32tc(spark: SparkSession, sf: str) -> DataFrame:
     pairs = g.join(g2, on="fp").filter(F.col("id") < F.col("id2")).select(
         F.col("id").alias("id_a"), F.col("id2").alias("id_b")
     )
-    # r14 note: the blocked matmul census (triangle_count(block_col="fp"),
-    # parity-tested) was measured HERE and kept OFF: this fixture's fp
-    # blocks are tiny (894 groups, max 14 nodes, Σdeg² ≈ 26k wedges), so
-    # one grouped-map kernel invocation per block costs more than the
-    # whole wedge join — the kernel is for dense-block graphs (the
-    # common_neighbors shape: ~10^8 wedges), not this one.
+    # r14 note: a blocked matmul census (one grouped-map kernel per fp
+    # block) was measured HERE and lost: this fixture's fp blocks are
+    # tiny (894 groups, max 14 nodes, Σdeg² ≈ 26k wedges), so one kernel
+    # invocation per block cost more than the whole wedge join.
     return dedup.triangle_count(pairs)
 
 

@@ -144,28 +144,6 @@ def test_semantic_join_kernel_fold_parity_on_fixture(spark):
     assert kern == fold
 
 
-# --- blocked triangle census vs the wedge-join path ----------------------
-
-
-def test_triangle_block_kernel_matches_join_path(spark):
-    random.seed(3)
-    rows = []
-    for blk in range(6):
-        base = blk * 100
-        for _ in range(120):
-            rows.append((base + random.randint(0, 25),
-                         base + random.randint(0, 25), f"b{blk}"))
-    pairs = spark.createDataFrame(rows, "id_a long, id_b long, blk string")
-    join_row = tuple(dedup.triangle_count(pairs).collect()[0])
-    kern_row = tuple(
-        dedup.triangle_count(pairs, block_col="blk").collect()[0]
-    )
-    assert kern_row == join_row
-    empty = spark.createDataFrame([], "id_a long, id_b long, blk string")
-    assert tuple(dedup.triangle_count(empty, block_col="blk").collect()[0]) \
-        == tuple(dedup.triangle_count(empty).collect()[0]) == (0, 0, 0)
-
-
 # --- binary-search bucket assign vs the filter-count lambda --------------
 
 

@@ -429,3 +429,22 @@ def test_mmr_drops_vectorless_candidates(spark):
     # vectors) drop before selection instead of crashing the Arrow
     # kernel — only id 10 survives, so fewer than k rows come back.
     assert [(r["vec_id"], r["mmr_rank"]) for r in got] == [(10, 1)]
+
+
+def test_mmr_null_relevance_ranks_last_in_any_row_order(spark):
+    from ddataframeoperation_spark.operators import retrieval as RT
+
+    rows = [("q", 1, None), ("q", 2, 0.9), ("q", 3, 0.5)]
+    vectors = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    # Documented contract: a NULL relevance ranks after every scored
+    # candidate. A NaN key never won the argmax, so a NULL candidate that
+    # came first in its group used to take pick 1.
+    for order in (rows, rows[::-1]):
+        pred = spark.createDataFrame(
+            order, "query_id string, vec_id long, cos_sim double"
+        ).coalesce(1)
+        got = RT.mmr_diversify(pred, vectors, k=3, lamb=0.5).collect()
+        assert [r["vec_id"] for r in sorted(got, key=lambda r: r["mmr_rank"])] == [2, 3, 1]

@@ -1070,6 +1070,8 @@ def test_triangle_count_known_graph(spark):
     # (1;2,3), (2;3?) 2's higher neighbors {3} -> none, (3;4?) {4} ->
     # none... plus (1;2,3) only. Closed: (2,3) is an edge -> 1 triangle.
     assert (r["n_edges"], r["n_wedges"], r["n_triangles"]) == (4, 1, 1)
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    assert tuple(triangle_count(empty).collect()[0]) == (0, 0, 0)
 
 
 def test_triangle_count_clique_counts(spark):
