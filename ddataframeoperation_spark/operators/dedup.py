@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from ddataframeoperation_spark.operators.windows import latest_per_key
 
 __all__ = [
-    "dedup_exact",
     "dedup_by_key",
     "dedup_increment",
     "normalized_text",
@@ -35,7 +34,6 @@ __all__ = [
     "dedup_by_fingerprint",
     "shingles",
     "ngram_shingles",
-    "minhash_signature",
     "minhash_band_table",
     "minhash_candidates",
     "minhash_candidates_incremental",
@@ -63,14 +61,6 @@ __all__ = [
     "hits",
     "sweep_checkpoint_rounds",
 ]
-
-
-def dedup_exact(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """B31 — exact dedup on full row or column subset. Nondeterministic
-    about *which* duplicate survives (fine when rows are identical on
-    ``cols`` and you only keep ``cols``); use :func:`dedup_by_key` for a
-    deterministic keep-first."""
-    return df.dropDuplicates(list(cols) if cols else None)
 
 
 def dedup_by_key(
@@ -158,20 +148,6 @@ def shingles(col: str | Column, n: int = 3) -> Column:
     inlined split here re-evaluates per element (see ngram_shingles).
     """
     return ngram_shingles(F.split(normalized_text(col), " "), n)
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<bigint>: for seed s in 0..k-1,
-    min over shingles of xxhash64(shingle, s). Entirely
-    ``transform``/``array_min`` builtins — codegen'd, no UDF."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_col, lambda sh: F.xxhash64(sh, F.lit(s)))
-            )
-            for s in range(num_hashes)
-        ]
-    )
 
 
 #: Spark XXH64 primes (org.apache.spark.sql.catalyst.expressions.XXH64) —

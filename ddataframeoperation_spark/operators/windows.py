@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "epoch_seconds",
-    "with_row_number",
     "ranked",
     "with_lag_lead",
     "running_agg",
@@ -56,16 +55,6 @@ def epoch_seconds(c: Column) -> Column:
     inputs); any session-tz shift cancels wherever two epochs are
     subtracted. Shared by sessionize and the as-of join."""
     return c.cast("timestamp").cast("double")
-
-
-def with_row_number(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    name: str = "rn",
-) -> DataFrame:
-    """B17 — row_number over a partitioned, ordered window."""
-    return df.withColumn(name, F.row_number().over(_w(partition_by, order_by)))
 
 
 def ranked(

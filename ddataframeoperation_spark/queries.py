@@ -29,7 +29,11 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ddataframeoperation_spark.catalog import load_fixture_tables, read_fixture_table
+from ddataframeoperation_spark.catalog import (
+    _parquet_schema,
+    load_fixture_tables,
+    read_fixture_table,
+)
 from ddataframeoperation_spark.operators import (
     dedup,
     multimodal,
@@ -4369,7 +4373,7 @@ def b38tb(spark: SparkSession, sf: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        schema = spark.read.parquet(f"{sf}/documents.parquet").schema
+        schema = _parquet_schema(spark, f"{sf}/documents.parquet")
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)

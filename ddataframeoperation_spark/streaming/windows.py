@@ -25,6 +25,8 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ddataframeoperation_spark.catalog import _normalize_timestamps, _parquet_schema
+
 __all__ = [
     "bounded_state_partitions",
     "events_as_stream",
@@ -89,15 +91,13 @@ def bounded_state_partitions(
 def events_as_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events fixture as a file-source stream (one-file-per-batch
     keeps the replay deterministic enough for equivalence checks)."""
-    from ddataframeoperation_spark.catalog import _normalize_timestamps
-
-    # Older fixtures store timestamp[ns]; the batch schema probe below fails
+    # Older fixtures store timestamp[ns]; the schema probe below fails
     # with PARQUET_TYPE_ILLEGAL on a vanilla session unless the legacy
     # ns-as-long conf is set FIRST (read_fixture_table does the same — but
     # streaming entry points must not depend on a batch query having run
     # earlier in the session).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _parquet_schema(spark, f"{sf_dir}/events.parquet")
     # The file stream source requires a *directory*; select just the events
     # file out of the fixture dir with a glob filter.
     stream = (
@@ -139,7 +139,7 @@ def stage_multi_batch_replay(
     for i, f in enumerate(sorted(glob.glob(f"{stage_dir}/part-*"))):
         os.utime(f, (now + i, now + i))
     spark = batch_df.sparkSession
-    schema = spark.read.parquet(stage_dir).schema
+    schema = _parquet_schema(spark, stage_dir)
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -213,7 +213,7 @@ def run_with_late_replay(
         shutil.rmtree(tmp, ignore_errors=True)
 
     _stage(batch_df.filter(F.col(ts_col) >= F.lit(cutoff)), 0, "head")
-    schema = spark.read.parquet(input_dir).schema
+    schema = _parquet_schema(spark, input_dir)
 
     def _run() -> None:
         stream = (

@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import types as T
 
 from ddataframeoperation_spark import compat
@@ -61,6 +62,26 @@ def test_final_output_csv_and_manifest(spark, tmp_path):
     pmml = open(os.path.join(manifest["PMMLLocation"], "part-00000")).read()
     assert pmml.count("<FieldRef") == 2
     assert "<DataDictionary" in pmml
+
+
+def test_final_output_failed_pmml_leaves_no_run_dir(spark, tmp_path, monkeypatch):
+    # The data and its _SUCCESS marker are written before the PMML: a failed
+    # PMML write must not leave that data behind looking like a finished run.
+    def broken_save(*args, **kwargs):
+        raise OSError("pmml store down")
+
+    monkeypatch.setattr(compat, "save_text_file", broken_save)
+    df = spark.createDataFrame([(1, "x")], "id int, name string")
+    posts = []
+    with pytest.raises(OSError, match="pmml store down"):
+        compat.final_output(
+            df,
+            str(tmp_path),
+            job_reporter=lambda loc, status: posts.append(status),
+            write_pmml=True,
+        )
+    assert posts == [3]
+    assert os.listdir(tmp_path) == []
 
 
 def test_perform_load_data_catalog(spark, sf_dir):
