@@ -198,6 +198,12 @@ def _parquet_schema(spark: SparkSession, path: str) -> StructType:
     return _parse_datatype_json_string(jschema.asNullable().json())
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    :func:`_parquet_schema`, so the read starts no inference job."""
+    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+
+
 #: Memoized fixture DataFrames keyed by (applicationId, sf_dir, table).
 #: Fixtures are immutable, so reusing the analyzed DataFrame is safe and
 #: skips the per-call file listing + parquet footer schema read — fixed
@@ -229,8 +235,7 @@ def read_fixture_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
-    df = _normalize_timestamps(df)
+    df = _normalize_timestamps(_read_parquet(spark, path))
     _FIXTURE_CACHE[key] = df
     return df
 

@@ -24,6 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ddataframeoperation_spark.catalog import _read_parquet
 from ddataframeoperation_spark.operators.windows import latest_per_key
 
 __all__ = [
@@ -150,54 +151,6 @@ def shingles(col: str | Column, n: int = 3) -> Column:
     return ngram_shingles(F.split(normalized_text(col), " "), n)
 
 
-#: Spark XXH64 primes (org.apache.spark.sql.catalyst.expressions.XXH64) —
-#: the pinned hash family of the MinHash signature plane. The numpy
-#: reimplementation below is bit-for-bit equal to Spark's ``xxhash64``
-#: long/int paths (parity-tested in tests/test_opt_r14.py); Spark
-#: guarantees hash stability across releases, so the two can never drift.
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def _np_xxh64_long(v, seed):
-    """Vectorized Spark ``XXH64.hashLong`` over a uint64 ndarray (or
-    scalar) ``v`` with uint64 ``seed``. All arithmetic wraps mod 2^64."""
-    import numpy as np
-
-    u = np.uint64
-    h = seed + u(_XXH_P5) + u(8)
-    k1 = v * u(_XXH_P2)
-    k1 = ((k1 << u(31)) | (k1 >> u(33))) * u(_XXH_P1)
-    h = h ^ k1
-    h = ((h << u(27)) | (h >> u(37))) * u(_XXH_P1) + u(_XXH_P4)
-    h ^= h >> u(33)
-    h *= u(_XXH_P2)
-    h ^= h >> u(29)
-    h *= u(_XXH_P3)
-    h ^= h >> u(32)
-    return h
-
-
-def _np_xxh64_int(v, seed):
-    """Vectorized Spark ``XXH64.hashInt`` (4-byte input, zero-extended)
-    over uint64 ``seed`` array/scalar; ``v`` is a plain Python int."""
-    import numpy as np
-
-    u = np.uint64
-    h = seed + u(_XXH_P5) + u(4)
-    h = h ^ (u(v & 0xFFFFFFFF) * u(_XXH_P1))
-    h = ((h << u(23)) | (h >> u(41))) * u(_XXH_P2) + u(_XXH_P3)
-    h ^= h >> u(33)
-    h *= u(_XXH_P2)
-    h ^= h >> u(29)
-    h *= u(_XXH_P3)
-    h ^= h >> u(32)
-    return h
-
-
 def minhash_band_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -205,7 +158,6 @@ def minhash_band_table(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    arrow_signature: bool = True,
 ) -> DataFrame:
     """(id, band, bucket) banded-MinHash table — the LSH index itself.
 
@@ -218,21 +170,13 @@ def minhash_band_table(
     stored index without recomputing corpus signatures
     (minhash_candidates_incremental).
 
-    ``arrow_signature`` (r14, guide §4.2): the per-seed hashing + min
-    aggregation runs as a streaming Arrow kernel — per record batch,
-    ``xxhash64(h0, seed)`` for all k seeds is ~10 vectorized uint64 ops
-    each (the common inner ``hashLong(h0, 42)`` computed ONCE instead of
-    per seed, which the JVM expression form cannot share because the
-    seed is baked into each xxhash64 call), then a per-batch partial
-    min per id; the JVM merges partials with the same map-side-combining
-    groupBy as before. Bit-identical output (the numpy XXH64 is
-    parity-pinned against Spark's), bounded memory (one Arrow batch per
-    step — no blocked-kernel boundedness contract needed), same shuffle
-    shape (partials are ≤ ids-per-batch rows). ``False`` keeps the pure
-    JVM aggregate: k ``min(xxhash64(h0, s))`` columns in whole-stage
-    codegen. (The closed-form alternative — one giant nested
+    The signature is k ``min(xxhash64(h0, s))`` aggregates in whole-stage
+    codegen, combined map-side. A streaming Arrow kernel that ported
+    XXH64 to numpy measured no faster (sf0.1, 4 task threads: 1.31 s vs
+    1.26 s for the table, 1.45 s vs 1.26 s for the band-bucket
+    self-join). The closed-form alternative — one giant nested
     transform/array_min expression per row — falls out of codegen and
-    re-evaluates the shingle expression per hash: ~100× slower measured.)
+    re-evaluates the shingle expression per hash: ~100× slower measured.
     """
     rows_per_band = num_hashes // bands
     exploded = (
@@ -243,52 +187,12 @@ def minhash_band_table(
         )
         .select("id", F.xxhash64("sh").alias("h0"))
     )
-    hcols = [f"h{s}" for s in range(num_hashes)]
-    if arrow_signature:
-        id_type = dict(exploded.dtypes)["id"]
-        k = num_hashes
-
-        def _partial_sig(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            aggs = [(h, "min") for h in hcols]
-            with np.errstate(over="ignore"):
-                for b in batches:
-                    if b.num_rows == 0:
-                        continue
-                    h0 = b.column("h0").to_numpy(
-                        zero_copy_only=False
-                    ).astype(np.int64).view(np.uint64)
-                    base = _np_xxh64_long(h0, np.uint64(42))
-                    cols = {"id": b.column("id")}
-                    for s in range(k):
-                        cols[hcols[s]] = pa.array(
-                            _np_xxh64_int(s, base).view(np.int64)
-                        )
-                    g = (
-                        pa.table(cols)
-                        .group_by("id", use_threads=False)
-                        .aggregate(aggs)
-                    )
-                    yield from g.select(
-                        ["id"] + [f"{h}_min" for h in hcols]
-                    ).rename_columns(["id"] + hcols).to_batches()
-
-        partial = exploded.mapInArrow(
-            _partial_sig,
-            f"id {id_type}, " + ", ".join(f"{h} long" for h in hcols),
-        )
-        sig = partial.groupBy("id").agg(
-            *[F.expr(f"min({h}) AS {h}") for h in hcols]
-        )
-    else:
-        sig = exploded.groupBy("id").agg(
-            *[
-                F.expr(f"min(xxhash64(h0, {s})) AS h{s}")
-                for s in range(num_hashes)
-            ]
-        )
+    sig = exploded.groupBy("id").agg(
+        *[
+            F.expr(f"min(xxhash64(h0, {s})) AS h{s}")
+            for s in range(num_hashes)
+        ]
+    )
     band_structs = ", ".join(
         "struct({b} AS band, xxhash64({cols}) AS bucket)".format(
             b=b,
@@ -404,14 +308,15 @@ def _round_truncator(prefix: str, run: str, checkpoint_dir: "str | None"):
     ``checkpoint_dir`` (cluster mode — names MUST stay in sync with
     ``_ROUND_DIR_RE`` so :func:`sweep_checkpoint_rounds` can clean them;
     keeping every writer here is what pins that), else eager
-    ``localCheckpoint`` (single-node/test mode)."""
+    ``localCheckpoint`` (single-node/test mode). A parquet round is read
+    back with its footer schema, so only the write starts a Spark job."""
     seq = iter(range(10**6))
 
     def _truncate(df: DataFrame) -> DataFrame:
         if checkpoint_dir is not None:
             path = f"{checkpoint_dir}/{prefix}_{run}_round_{next(seq)}"
             df.write.mode("overwrite").parquet(path)
-            return df.sparkSession.read.parquet(path)
+            return _read_parquet(df.sparkSession, path)
         return df.localCheckpoint(eager=True)
 
     return _truncate
@@ -828,7 +733,6 @@ def jaccard_pairs(
     group_col: str | None = None,
     threshold: float = 0.5,
     shingle_n: int | None = None,
-    arrow_kernel: bool = True,
     keep_group: bool = False,
 ) -> DataFrame:
     """B32 — exact token-set Jaccard similarity via explode + equi-join on
@@ -855,17 +759,17 @@ def jaccard_pairs(
     (true for any row-level blocking key — a document has one source);
     the group value of a pair is then well-defined.
 
-    When ``group_col`` is given, ``arrow_kernel=True`` (default) scores
-    each block with one numpy matmul (binary doc×block-vocab matrix ·
-    its transpose = ALL pairwise intersections) instead of the
-    inverted-index self-join — ~7× at sf0.1, same exact result. The
-    kernel holds one block in memory (the cosine-kernel contract); the
-    inverted index remains the unblocked/100 TB default, where block
-    vocabulary × block size is unbounded.
+    When ``group_col`` is given, each block is scored with one numpy
+    matmul (binary doc×block-vocab matrix · its transpose = ALL pairwise
+    intersections) — measured 2.5 s vs 7.3 s for a blocked inverted-index
+    self-join (sf0.1, 4 task threads). The kernel holds one block in memory (the
+    cosine-kernel contract); rows with a NULL id or a NULL group key
+    pair with nothing. Unblocked calls use the inverted index, where
+    vocabulary × corpus size is unbounded.
     """
     if keep_group and group_col is None:
         raise ValueError("keep_group requires group_col")
-    if group_col is not None and arrow_kernel:
+    if group_col is not None:
         return _jaccard_pairs_block_kernel(
             df, id_col, text_col, group_col, threshold, shingle_n, keep_group
         )
@@ -875,11 +779,9 @@ def jaccard_pairs(
     )
     tok = pre.select(
         F.col(id_col).alias("id"),
-        *( [F.col(group_col).alias("grp")] if group_col else [] ),
         F.explode(F.array_distinct(units)).alias("tok"),
     )
     sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
-    join_on = ["tok"] + (["grp"] if group_col else [])
     # Document-frequency pruning: a token that occurs in exactly one
     # document can never contribute to an intersection, yet such tokens
     # (hapax legomena — typically ~half the vocabulary, and every typo,
@@ -888,7 +790,7 @@ def jaccard_pairs(
     # unpruned ``sizes``. The window count partitions by the same key the
     # self-join shuffles on, so the exchange (and sort) is computed once
     # and reused by both join sides.
-    w = Window.partitionBy(*join_on)
+    w = Window.partitionBy("tok")
     tok = (
         tok.withColumn("_df", F.count("*").over(w))
         .filter(F.col("_df") >= 2)
@@ -896,21 +798,14 @@ def jaccard_pairs(
     )
     a = tok.alias("a")
     b = tok.alias("b")
-    # keep_group rides the intersection aggregate as an extra group key —
-    # free under the one-group-per-id contract (each (id_a, id_b) pair
-    # lives in exactly one group, so the grouping is unchanged).
-    grp_keys = [F.col("a.grp").alias("_grp")] if keep_group else []
     inter = (
-        a.join(b, on=join_on)
+        a.join(b, on="tok")
         .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), *grp_keys
-        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
     sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
     sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    tail = [F.col("_grp").alias(group_col)] if keep_group else []
     return (
         inter.join(sz_a, "id_a")
         .join(sz_b, "id_b")
@@ -919,7 +814,7 @@ def jaccard_pairs(
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
         .filter(F.col("jacc") >= threshold)
-        .select("id_a", "id_b", F.round("jacc", 4).alias("jacc"), *tail)
+        .select("id_a", "id_b", F.round("jacc", 4).alias("jacc"))
     )
 
 
@@ -1019,11 +914,14 @@ def _jaccard_pairs_block_kernel(
     units = (
         ngram_shingles(F.col("_toks"), shingle_n) if shingle_n else F.col("_toks")
     )
+    # NULL ids and NULL group keys pair with nothing (the SQL semantics of
+    # ``a.grp = b.grp AND a.id < b.id``); pandas would group the NULL keys
+    # together and sort the NULL ids into the pairs.
     blocked = pre.select(
         F.col(id_col).alias("id"),
         F.col(group_col).alias("grp"),
         F.array_distinct(units).alias("toks"),
-    )
+    ).filter(F.col("id").isNotNull() & F.col("grp").isNotNull())
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         m = len(pdf)
@@ -1432,7 +1330,7 @@ def hamming_candidates(
 
             path = f"{checkpoint_dir}/simhash_chunk_index_{uuid.uuid4().hex[:12]}"
             chunks.write.mode("overwrite").parquet(path)
-            chunks = chunks.sparkSession.read.parquet(path)
+            chunks = _read_parquet(chunks.sparkSession, path)
         else:
             chunks = chunks.localCheckpoint(eager=True)
         small = chunks.filter(F.col("_n") <= max_bucket).drop("_n", "_rep")

@@ -1,12 +1,12 @@
 """Multimodal (image/audio/video) column plumbing.
 
 SURVEY.md north-star item: treat media as opaque ``binary`` columns with
-typed metadata; decode/feature-extract/resize/frame-sample run as
-Arrow-batched Pandas UDFs over ``mapInPandas``. The container has no media
-libraries, so the decode kernels are deterministic fakes / clearly-marked
-stubs — the Spark-side plumbing (schema, batch shape, partitioning,
-UDF signature) is real and tested, which is the part that matters for the
-engine.
+typed metadata; ingestion, metadata, fingerprints and payload near-dup
+candidates are plain JVM columns. ``decode_image_batch`` is the one
+Arrow-batched ``mapInPandas`` kernel; no media library is available, so
+it is a clearly-marked stub that derives dimensions from the payload
+length — the Spark-side plumbing (schema, batch shape, partitioning,
+UDF signature) is real and tested.
 
 Scale notes (100 TB of media):
 - binary payloads ride in parquet; metadata columns (format, width, ...)
@@ -39,9 +39,6 @@ __all__ = [
     "attach_media_metadata",
     "media_stats",
     "decode_image_batch",
-    "extract_image_features",
-    "resize_images",
-    "sample_video_frames",
     "read_binary_files",
     "media_fingerprint",
     "media_neardup_candidates",
@@ -110,84 +107,6 @@ def decode_image_batch(df: DataFrame) -> DataFrame:
             yield out
 
     return df.select("media_id", "payload").mapInPandas(_decode, DECODED_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Resize stub over ``mapInPandas``: payload in → resized payload +
-    target dims out. The kernel is a clearly-marked stub (no PIL in this
-    container) that passes bytes through; a real deployment replaces ONLY
-    the inner function — schema, Arrow batching, and partitioning stay.
-    """
-    import pandas as pd
-
-    schema = "media_id bigint, payload binary, width int, height int"
-
-    def _resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = pd.DataFrame()
-            out["media_id"] = pdf["media_id"]
-            # STUB: real kernel = PIL resize; plumbing identical.
-            out["payload"] = pdf["payload"]
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(_resize, schema)
-
-
-def sample_video_frames(df: DataFrame, every_nth: int = 10, max_frames: int = 8) -> DataFrame:
-    """Frame-sampling stub: one input row (video payload) → up to
-    ``max_frames`` output rows (frame payloads) — the 1:N explode shape of
-    real frame extraction, with a deterministic fake splitter standing in
-    for ffmpeg. Output rows stay on the executor that held the input row
-    (no shuffle); downstream per-frame ops parallelize naturally."""
-    import pandas as pd
-
-    schema = "media_id bigint, frame_no int, frame binary"
-
-    def _sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, nos, frames = [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                if b is None or len(b) == 0:
-                    continue
-                # STUB: treat every `every_nth` byte offset as a "frame";
-                # real kernel = ffmpeg keyframe extraction.
-                n = min(max_frames, max(1, len(b) // every_nth))
-                step = max(1, len(b) // n)
-                for i in range(n):
-                    ids.append(mid)
-                    nos.append(i)
-                    frames.append(bytes(b[i * step : (i + 1) * step]))
-            yield pd.DataFrame({"media_id": ids, "frame_no": nos, "frame": frames})
-
-    return df.select("media_id", "payload").mapInPandas(_sample, schema)
-
-
-def extract_image_features(df: DataFrame, dim: int = 8) -> DataFrame:
-    """Feature-extraction stub: payload → fixed-dim float vector
-    (deterministic fake: byte histogram folded to ``dim``). The real model
-    inference would run here with identical plumbing (Arrow batches in,
-    ``array<float>`` out)."""
-    import numpy as np
-    import pandas as pd
-
-    schema = f"media_id bigint, feature array<float>"
-
-    def _feat(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = []
-            for b in pdf["payload"]:
-                if b is None or len(b) == 0:
-                    feats.append([0.0] * dim)
-                    continue
-                arr = np.frombuffer(b, dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float32")
-                norm = float(np.linalg.norm(hist)) or 1.0
-                feats.append((hist / norm).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
-
-    return df.select("media_id", "payload").mapInPandas(_feat, schema)
 
 
 def read_binary_files(

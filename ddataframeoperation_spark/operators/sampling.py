@@ -46,7 +46,6 @@ __all__ = [
     "temporal_split",
     "shard_manifest",
     "negative_samples",
-    "write_training_shards",
     "poisson_replicates",
     "rolling_origin_folds",
     "class_balance",
@@ -789,41 +788,6 @@ def negative_samples(
         F.col("_i").alias("neg_rank"),
         F.col("_m._c").alias("negative"),
     )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key_cols: Sequence[str | Column],
-    token_col: str | Column | None = None,
-    salt: str = "",
-) -> DataFrame:
-    """B22/B29 — the training-export sink: write the corpus as
-    ``n_shards`` deterministic shard partitions (parquet,
-    ``partitionBy(shard)`` — each reader opens exactly its directory,
-    no scan-time filtering) alongside a ``_manifest`` parquet of
-    :func:`shard_manifest` rows. A reader fleet verifies its shards
-    against the manifest BEFORE an epoch starts; because assignment is
-    the same md5 arithmetic as the manifest, any engine can rebuild and
-    re-check a shard independently.
-
-    Rows whose keys hash to NULL (NULL key columns) are excluded from
-    both the data and the manifest — the hash_* contract. Returns the
-    manifest DataFrame (reread from disk, so callers verify what was
-    actually persisted, not the plan that produced it).
-    """
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    u = hash_uniform(key_cols, salt)
-    shard = F.floor(u * n_shards).cast("int")
-    data = df.withColumn("shard", shard).filter(F.col("shard").isNotNull())
-    data.write.mode("overwrite").partitionBy("shard").parquet(f"{path}/data")
-    manifest = shard_manifest(
-        df, n_shards, key_cols, token_col=token_col, salt=salt
-    )
-    manifest.write.mode("overwrite").parquet(f"{path}/_manifest")
-    return df.sparkSession.read.parquet(f"{path}/_manifest")
 
 
 def mixture_weights(

@@ -76,9 +76,9 @@ def cosine(a: Column, b: Column) -> Column:
     ``nanvl`` maps it to NULL too. NULL scores sort last in the callers'
     descending rankings and fail threshold predicates, so degenerate
     vectors lose everywhere (count them with :func:`embedding_health`).
-    Both wrappers evaluate the fold ONCE — no when()/filter re-inlining
-    of the interpreted aggregate (the measured 3-10x trap documented in
-    :func:`semantic_join`)."""
+    Both wrappers evaluate the fold ONCE — a when()/filter wrapper would
+    re-inline the interpreted aggregate into each branch, which measured
+    3-10x slower."""
     raw = F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
     return F.nanvl(raw, F.lit(None).cast("double"))
 
@@ -173,7 +173,6 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     planes: Sequence[Sequence[float]] | None = None,
-    arrow_kernel: bool = True,
     keep_block: bool = False,
 ) -> DataFrame:
     """B33/north-star — embedding-cosine near-duplicate pairs.
@@ -185,13 +184,16 @@ def cosine_neardup_pairs(
     raise recall by passing several independent plane sets and unioning).
     Exact cosine re-scores candidates; only pairs >= threshold survive.
 
-    Default scoring path (``arrow_kernel=True``): one shuffle on the block
-    key, then an Arrow-batched ``applyInPandas`` kernel per block — numpy
-    row-normalize + one BLAS matmul for all within-block pairs. Spark's
-    higher-order array functions are CodegenFallback (interpreted, boxed,
-    per-element), so the JVM per-pair zip_with/aggregate dot is ~10× slower
-    on candidate-heavy blocks (measured 5.4s → 0.5s at sf0.1). The
-    fallback (``arrow_kernel=False``) keeps the pure-JVM self-join form.
+    Scoring: one shuffle on the block key, then an Arrow-batched
+    ``applyInPandas`` kernel per block — numpy row-normalize + one BLAS
+    matmul for all within-block pairs. Spark's higher-order array
+    functions are CodegenFallback (interpreted, boxed, per-element), so a
+    JVM self-join with a per-pair zip_with/aggregate dot measured 13×
+    slower (6.7 s vs 0.5 s at sf0.1, 4 task threads). Rows with a NULL id
+    or a NULL block key pair with nothing (the SQL semantics of
+    ``a.blk = b.blk AND a.id < b.id``). A zero-norm vector scores 0 and
+    a NaN element scores NaN, so neither pairs with anything at a
+    threshold > 0.
 
     Block-size contract at 100 TB: a block's vectors must fit one
     executor's memory (the same contract every IVF/blocked-matmul system
@@ -215,90 +217,50 @@ def cosine_neardup_pairs(
     else:
         raise ValueError("pass block_col or planes — unblocked pairwise "
                          "cosine is a cross join and does not scale")
+    import numpy as np
+
     blocked = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), blk.alias("blk")
-    )
-    if arrow_kernel:
-        import numpy as np
+    ).filter(F.col("id").isNotNull() & F.col("blk").isNotNull())
+    thr = float(threshold)
+    id_type = dict(df.dtypes)[id_col]
 
-        thr = float(threshold)
-        id_type = dict(df.dtypes)[id_col]
-
-        def _block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = len(pdf)
-            cols = ["id_a", "id_b", "cos_sim"] + (["blk"] if keep_block else [])
-            if m < 2:
-                return pd.DataFrame({c: [] for c in cols})
-            pdf = pdf.sort_values("id")
-            ids = pdf["id"].to_numpy()
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-            n = np.linalg.norm(V, axis=1)
-            n[n == 0.0] = 1.0
-            V /= n[:, None]
-            S = V @ V.T
-            iu, ju = np.triu_indices(m, k=1)
-            s = S[iu, ju]
-            keep = s >= thr
-            # floor(x*1e4+0.5)/1e4, not np.round: half-to-even diverges
-            # from SQL half-away rounding on exact grid ties (same fix as
-            # the Jaccard kernel).
-            out = {
-                "id_a": ids[iu[keep]],
-                "id_b": ids[ju[keep]],
-                "cos_sim": np.floor(s[keep] * 10000 + 0.5) / 10000,
-            }
-            if keep_block:
-                out["blk"] = pdf["blk"].iloc[0]
-            return pd.DataFrame(out)
-
-        from ddataframeoperation_spark.operators.script import (
-            apply_script_grouped,
-        )
-
-        schema = f"id_a {id_type}, id_b {id_type}, cos_sim double"
+    def _block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        m = len(pdf)
+        cols = ["id_a", "id_b", "cos_sim"] + (["blk"] if keep_block else [])
+        if m < 2:
+            return pd.DataFrame({c: [] for c in cols})
+        pdf = pdf.sort_values("id")
+        ids = pdf["id"].to_numpy()
+        V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
+        n = np.linalg.norm(V, axis=1)
+        n[n == 0.0] = 1.0
+        V /= n[:, None]
+        S = V @ V.T
+        iu, ju = np.triu_indices(m, k=1)
+        s = S[iu, ju]
+        keep = s >= thr
+        # floor(x*1e4+0.5)/1e4, not np.round: half-to-even diverges
+        # from SQL half-away rounding on exact grid ties (same fix as
+        # the Jaccard kernel).
+        out = {
+            "id_a": ids[iu[keep]],
+            "id_b": ids[ju[keep]],
+            "cos_sim": np.floor(s[keep] * 10000 + 0.5) / 10000,
+        }
         if keep_block:
-            schema += f", blk {dict(df.dtypes)[block_col]}"
-        # apply_script_grouped pins the Python stage's parallelism (AQE
-        # would coalesce the exchange, starving the per-block matmul).
-        out = apply_script_grouped(blocked, ["blk"], _block_pairs, schema)
-        return out.withColumnRenamed("blk", block_col) if keep_block else out
-    # JVM fallback: pre-normalize each vector ONCE per row (materialized
-    # column — a lambda-referenced norm expression would be re-inlined and
-    # recomputed per element) so a candidate pair costs one dot product.
-    # try_divide: a zero-norm vector would otherwise raise DIVIDE_BY_ZERO
-    # under ANSI (Spark 4 default) and kill the job; NULL elements make
-    # its every dot NULL, which fails `>= threshold` below — the same
-    # "degenerate vectors pair with nothing" outcome the Arrow kernel
-    # reaches via cos = 0 (assuming threshold > 0, the only sane range).
-    normed = blocked.withColumn("_norm", l2_norm(F.col("v"))).select(
-        "id",
-        "blk",
-        F.transform(
-            F.col("v"), lambda x: F.try_divide(x.cast("double"), F.col("_norm"))
-        ).alias("v"),
-    )
-    a, b = normed.alias("a"), normed.alias("b")
-    cand = a.join(
-        b,
-        on=[F.col("a.blk") == F.col("b.blk"), F.col("a.id") < F.col("b.id")],
-    )
-    scored = cand.select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        # nanvl: a NaN element yields a NaN dot, and Spark's total-order
-        # comparison semantics make `NaN >= threshold` TRUE — a corrupt
-        # vector would pair with every block-mate. NULL instead fails
-        # the predicate, matching the Arrow kernel (numpy NaN >= t is
-        # False). One fold evaluation (no when() re-inlining).
-        F.nanvl(
-            dot(F.col("a.v"), F.col("b.v")), F.lit(None).cast("double")
-        ).alias("_cos"),
-        *( [F.col("a.blk").alias("_blk")] if keep_block else [] ),
-    )
-    tail = [F.col("_blk").alias(block_col)] if keep_block else []
-    return scored.filter(F.col("_cos") >= threshold).select(
-        "id_a", "id_b", F.round("_cos", 4).alias("cos_sim"), *tail
-    )
+            out["blk"] = pdf["blk"].iloc[0]
+        return pd.DataFrame(out)
+
+    from ddataframeoperation_spark.operators.script import apply_script_grouped
+
+    schema = f"id_a {id_type}, id_b {id_type}, cos_sim double"
+    if keep_block:
+        schema += f", blk {dict(df.dtypes)[block_col]}"
+    # apply_script_grouped pins the Python stage's parallelism (AQE
+    # would coalesce the exchange, starving the per-block matmul).
+    out = apply_script_grouped(blocked, ["blk"], _block_pairs, schema)
+    return out.withColumnRenamed("blk", block_col) if keep_block else out
 
 
 def hyperplane_signature(
@@ -844,7 +806,6 @@ def semantic_join(
     vec_col: str = "embedding",
     left_prefix: str = "l_",
     right_prefix: str = "r_",
-    arrow_kernel: bool = True,
 ) -> DataFrame:
     """B33 — semantic (embedding) join: for every LEFT row, the single
     nearest RIGHT row by cosine — the entity-resolution / "match this
@@ -852,31 +813,26 @@ def semantic_join(
     tables (unlike :func:`cosine_topk_multi`, whose query side must
     broadcast).
 
-    ``arrow_kernel=True`` (default, same rationale as
-    :func:`cosine_neardup_pairs`): candidates are scored per cell by a
-    cogrouped ``applyInPandas`` kernel — numpy row-normalize + one BLAS
-    matmul per cell pair, emitting each left row's per-cell winner; a
-    tiny global min settles across cells. Spark's higher-order folds
-    are CodegenFallback (interpreted, boxed), so the JVM per-pair dot
-    dominates on candidate-heavy cells (measured 3.1s → 0.9s on the
-    sf0.1 exhaustive probe; the gap widens with cell population since
-    the kernel's matmul amortizes per-batch overhead). The matmul's summation ORDER differs
-    from a sequential fold at ~1e-16 relative — winners are identical
-    except on exact-tie knife edges, but a hash-exact oracle comparison
-    should use ``arrow_kernel=False`` (the left-to-right fold, matching
-    any sequential SQL oracle bit-for-bit — what the registered query
-    does). NULL vector ELEMENTS score NaN on BOTH paths (the kernel
-    sees them as NaN in the matmul; the fold's NULL dot is coalesced to
-    NaN below) — "no valid score", losing to any real match, with a
-    left row whose every candidate is unscorable emitting cos_sim NaN;
-    ragged vectors fail in ``np.stack`` either way.
+    Candidates are scored per cell by a cogrouped ``applyInPandas``
+    kernel — numpy row-normalize + one BLAS matmul per cell pair,
+    emitting each left row's per-cell winner; a tiny global min settles
+    across cells. Spark's higher-order folds are CodegenFallback
+    (interpreted, boxed), so a per-pair JVM dot measured 17× slower on
+    the exhaustive probe (8.2 s vs 0.47 s at sf0.1, 4 task threads). The
+    matmul's summation order differs from a sequential fold at ~1e-16
+    relative, far below the 4dp rounding contract; the registered query
+    ``b33_semantic_join`` hash-matches its brute-force DuckDB oracle on
+    this path. NULL vector elements and zero-norm vectors score NaN —
+    "no valid score", losing to any real match, with a left row whose
+    every candidate is unscorable emitting cos_sim NaN; ragged vectors
+    fail in ``np.stack``.
 
     Scale shape — the IVF idea applied to a join: both sides get a
     coarse-centroid cell id (Arrow matmul, :func:`ivf_assign`); the left
-    side is exploded to its ``nprobe`` nearest cells; candidates come
-    from an EQUI-JOIN on the cell id (a plain shuffled hash join — never
-    a cross product); exact cosine + a per-left-row top-1 window settles
-    the match. Cost ∝ sum of cell-pair sizes — which makes the CELL
+    side is exploded to its ``nprobe`` nearest cells; candidates are the
+    rows of the same cell on both sides (a cogroup on the cell id —
+    never a cross product); exact cosine + a per-left-row top-1
+    settles the match. Cost ∝ sum of cell-pair sizes — which makes the CELL
     COUNT the scale contract: SIZE ncells TO THE CORPUS (bounded cell
     population, the FAISS rule). With ncells fixed, cell-pair cost grows
     as n²/ncells (measured: 11× wall at 10× corpus in the scale probe);
@@ -918,108 +874,60 @@ def semantic_join(
     rv_base = right.select(
         F.col(id_col).alias("_rid"), F.col(vec_col).alias("_rv")
     )
-    if arrow_kernel:
-        # Cogrouped per-cell matmul: one shuffle of each side on the
-        # cell id, then numpy row-normalize + BLAS scores for the whole
-        # cell pair at once; each left row emits its PER-CELL winner
-        # (argmax over rid-sorted columns → first max = lowest rid, the
-        # stated tiebreak), and the global min below settles across the
-        # ≤ nprobe cells per left row. Shuffled payload is identical to
-        # the join form — (cell, id, vector) — so the 100 TB posture
-        # (pre-partition both tables by cell at ingest) is unchanged.
-        lv = lv_base.withColumn("_cell", F.explode(_cells(F.col("_lv"))))
-        rv = ivf_assign(rv_base, centroids, vec_col="_rv", cell_col="_cell")
-        lid_t = dict(left.dtypes)[id_col]
-        rid_t = dict(right.dtypes)[id_col]
+    # Cogrouped per-cell matmul: one shuffle of each side on the
+    # cell id, then numpy row-normalize + BLAS scores for the whole
+    # cell pair at once; each left row emits its PER-CELL winner
+    # (argmax over rid-sorted columns → first max = lowest rid, the
+    # stated tiebreak), and the global min below settles across the
+    # ≤ nprobe cells per left row. Both sides shuffle (cell, id,
+    # vector), so at 100 TB both tables are pre-partitioned by cell at
+    # ingest.
+    lv = lv_base.withColumn("_cell", F.explode(_cells(F.col("_lv"))))
+    rv = ivf_assign(rv_base, centroids, vec_col="_rv", cell_col="_cell")
+    lid_t = dict(left.dtypes)[id_col]
+    rid_t = dict(right.dtypes)[id_col]
 
-        def _cell_best(lp: pd.DataFrame, rp: pd.DataFrame) -> pd.DataFrame:
-            if len(lp) == 0 or len(rp) == 0:
-                return pd.DataFrame({"_lid": [], "_rid": [], "_cos": []})
-            rp = rp.sort_values("_rid", kind="stable")
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in lp["_lv"]])
-            y = np.stack([np.asarray(v, dtype=np.float64) for v in rp["_rv"]])
-            s = (x @ y.T) / (
-                np.linalg.norm(x, axis=1, keepdims=True)
-                * np.linalg.norm(y, axis=1, keepdims=True).T
-            )
-            # NaN (zero-norm / NULL-element) candidates must lose the
-            # argmax — numpy's argmax would otherwise return the NaN.
-            sel = np.where(np.isnan(s), -np.inf, s)
-            j = np.argmax(sel, axis=1)
-            return pd.DataFrame(
-                {
-                    "_lid": lp["_lid"].to_numpy(),
-                    "_rid": rp["_rid"].to_numpy()[j],
-                    "_cos": s[np.arange(len(lp)), j],
-                }
-            )
+    def _cell_best(lp: pd.DataFrame, rp: pd.DataFrame) -> pd.DataFrame:
+        if len(lp) == 0 or len(rp) == 0:
+            return pd.DataFrame({"_lid": [], "_rid": [], "_cos": []})
+        rp = rp.sort_values("_rid", kind="stable")
+        x = np.stack([np.asarray(v, dtype=np.float64) for v in lp["_lv"]])
+        y = np.stack([np.asarray(v, dtype=np.float64) for v in rp["_rv"]])
+        s = (x @ y.T) / (
+            np.linalg.norm(x, axis=1, keepdims=True)
+            * np.linalg.norm(y, axis=1, keepdims=True).T
+        )
+        # NaN (zero-norm / NULL-element) candidates must lose the
+        # argmax — numpy's argmax would otherwise return the NaN.
+        sel = np.where(np.isnan(s), -np.inf, s)
+        j = np.argmax(sel, axis=1)
+        return pd.DataFrame(
+            {
+                "_lid": lp["_lid"].to_numpy(),
+                "_rid": rp["_rid"].to_numpy()[j],
+                "_cos": s[np.arange(len(lp)), j],
+            }
+        )
 
-        cand = (
-            lv.groupBy("_cell")
-            .cogroup(rv.groupBy("_cell"))
-            .applyInPandas(
-                _cell_best, f"_lid {lid_t}, _rid {rid_t}, _cos double"
-            )
+    cand = (
+        lv.groupBy("_cell")
+        .cogroup(rv.groupBy("_cell"))
+        .applyInPandas(
+            _cell_best, f"_lid {lid_t}, _rid {rid_t}, _cos double"
         )
-    else:
-        # Exact-fold form: per-row norms are projected ONCE PER ROW
-        # below the join (left: before the nprobe explode; right:
-        # before the broadcast/shuffle), so the per-candidate-pair work
-        # is a single interpreted array fold (the dot) instead of three
-        # — cosine()'s inline norms would re-fold each side's
-        # self-product per PAIR. Bitwise-identical to a sequential SQL
-        # oracle: the same left-to-right fold over the same values.
-        lv = (
-            lv_base.withColumn("_ln", l2_norm(F.col("_lv")))
-            .withColumn("_cell", F.explode(_cells(F.col("_lv"))))
-        )
-        rv = ivf_assign(
-            rv_base, centroids, vec_col="_rv", cell_col="_cell"
-        ).withColumn("_rn", l2_norm(F.col("_rv")))
-        # try_divide, not `/`: under ANSI (Spark 4 default) a zero-norm
-        # vector would raise DIVIDE_BY_ZERO and kill the job instead of
-        # reaching the documented NaN loser class below — try_divide's
-        # NULL feeds the same coalesce(-_cos, NaN).
-        cand = lv.join(rv, on="_cell").select(
-            "_lid",
-            "_rid",
-            F.try_divide(
-                dot(F.col("_lv"), F.col("_rv")),
-                F.col("_ln") * F.col("_rn"),
-            ).alias("_cos"),
-        )
+    )
     # Top-1 per left row as min(struct(-cos, rid)) rather than a
     # row_number window: the hash aggregate combines MAP-SIDE, so the
-    # shuffle carries one row per (task, left id) instead of the FULL
-    # candidate set (|L|·|R|/ncells rows — 12M at the sf0.1 exhaustive
-    # gate, all of which the window had to sort). Struct ordering is
+    # shuffle carries one row per (task, left id). Struct ordering is
     # field-by-field, so min picks the lowest NEGATED cosine (= highest
-    # cosine), then the LOWEST right id — the same stated tiebreak, on
-    # unrounded scores. The negation rides the DOUBLE score, never the
-    # id, so any orderable id type (string, timestamp, …) works exactly
-    # as the window form did. NaN scores (zero-norm vectors) sort
-    # LARGEST under min and therefore lose to any real match — stated.
-    # NULL-score guard (ADVICE r11): a NULL _cos would sort FIRST under
-    # ascending struct comparison and silently win top-1 (the old
-    # window's _cos.desc() put NULLs last) — reachable on the fold path
-    # via a NULL vector ELEMENT (the fold propagates it to a NULL dot).
-    # HOW the guard is written matters, twice over: (1) a
-    # pre-aggregation .filter(_cos.isNotNull()) is pushed through the
-    # projection into the hash join as an isnotnull(<dot>) JOIN
-    # CONDITION; (2) a when(isnotnull(_cos), ...) wrapper has the
-    # projected _cos INLINED into both branches of the aggregate input
-    # (no common-subexpression elimination for interpreted folds) —
-    # each form re-evaluates the fold per candidate pair (measured
-    # 1.1s -> 11.2s resp. 3.2s on the sf0.1 bench).
-    # coalesce(-_cos, NaN) keeps exactly ONE fold evaluation and maps a
-    # NULL score into the SAME "no valid score" class as a zero-norm
-    # NaN: Spark orders finite < +inf < NaN, so such candidates lose to
-    # every real match, and a left row with NO scorable candidate emits
-    # cos_sim NaN — on BOTH paths (the Arrow kernel sees NULL elements
-    # as NaN in the matmul and cannot distinguish them, so aligning the
-    # fold to NaN is what keeps kernel/fold parity; NaN ties break to
-    # the lowest right id under Spark's total order, same as the
-    # kernel's rid-sorted argmax).
+    # cosine), then the LOWEST right id — the stated tiebreak, on
+    # unrounded scores, for any orderable id type. A kernel NaN score
+    # crosses the Arrow boundary as NULL (pandas treats NaN as missing),
+    # and a NULL would sort FIRST under min and silently win;
+    # coalesce(-_cos, NaN) maps it back to NaN, which Spark orders after
+    # every finite value, so unscorable candidates lose to any real
+    # match, and a left row with NO scorable candidate emits cos_sim NaN
+    # with the lowest right id.
     best = F.min(
         F.struct(
             F.coalesce(-F.col("_cos"), F.lit(float("nan"))).alias("nc"),

@@ -35,7 +35,6 @@ __all__ = [
     "zvalue",
     "write_zordered",
     "merge_upsert",
-    "merge_upsert_partitioned",
     "compact",
     "key_skew_audit",
     "join_strategy_advice",
@@ -276,53 +275,6 @@ def _swap_staging(spark: SparkSession, staging: str, target: str) -> None:
             fs.rename(old, dst)
         raise IOError(f"could not move staging {staging} into {target}")
     fs.delete(old, True)
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    partition_col: str,
-    fmt: str = "parquet",
-) -> list:
-    """Partition-pruned MERGE onto a :func:`write_partitioned` table: only
-    the partitions that actually contain updated keys are rewritten; every
-    other partition's files are left byte-identical on disk.
-
-    This is the production shape of :func:`merge_upsert` at 100 TB — a
-    daily upsert into a date-partitioned events table touches a handful of
-    date directories, not the table. ``updates`` must carry
-    ``partition_col``. Returns the list of partition values rewritten.
-
-    The affected-partition list is collected driver-side: partition
-    columns are low-cardinality by layout contract (that's what makes
-    them partition columns), so this is a short list, not a data scan —
-    it prunes on the updates side, which is small by definition of an
-    upsert. Each rewritten partition is staged then swapped with the same
-    rename-aside discipline as :func:`merge_upsert`, so a crash
-    mid-partition leaves at most one partition in its __old/__staging
-    recovery state and idempotent re-runs converge.
-    """
-    affected = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    target = spark.read.format(fmt).load(target_path)
-    for pv in affected:
-        part_dir = f"{target_path.rstrip('/')}/{partition_col}={pv}"
-        part_updates = updates.filter(F.col(partition_col) == F.lit(pv))
-        # Partition filter on the scan → directory pruning: only this
-        # partition's files are read.
-        kept = target.filter(F.col(partition_col) == F.lit(pv)).join(
-            part_updates.select(*key_cols).distinct(),
-            on=list(key_cols),
-            how="left_anti",
-        )
-        merged = kept.unionByName(part_updates).drop(partition_col)
-        staging = part_dir + "__staging"
-        merged.write.mode("overwrite").format(fmt).save(staging)
-        _swap_staging(spark, staging, part_dir)
-    return affected
 
 
 def compact(

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ddataframeoperation_spark.catalog import _read_parquet
 from ddataframeoperation_spark.operators.dedup import normalized_text
 
 __all__ = [
@@ -1960,7 +1961,7 @@ def keyword_pagerank(
     if checkpoint_dir is not None:
         path = f"{checkpoint_dir}/kwpr_edges_{run}"
         edges.write.mode("overwrite").parquet(path)
-        edges = df.sparkSession.read.parquet(path)
+        edges = _read_parquet(df.sparkSession, path)
     else:
         edges = edges.localCheckpoint(eager=True)
     nodes = (

@@ -9983,14 +9983,11 @@ def b33sj(spark: SparkSession, sf: str) -> DataFrame:
     l = emb.filter(F.col("vec_id") < 250)
     r = emb.filter(F.col("vec_id") >= 250)
     cents = similarity.kmeans_centroids(emb, k=8, iters=5)
-    # r13 optimization: the registered query now runs the PRODUCTION
-    # arrow_kernel path (per-cell BLAS matmul, guide §4.2) instead of
-    # the interpreted per-pair fold it pinned in r12 — measured
-    # 3.5 s → 0.9 s on the exhaustive sf0.1 probe. Result identity is
-    # not assumed from the ~1e-16 summation-order story: the kernel
-    # output was hash-proven against the DuckDB oracle at sf0.001/0.01/
-    # 0.1 before the switch, and kernel/fold winner parity (incl. tie
-    # and NULL/NaN classes) stays pinned in tests/test_round12_ops.py.
+    # semantic_join scores each cell pair with one BLAS matmul. Result
+    # identity is not assumed from the ~1e-16 summation-order story: the
+    # output hash-matches the DuckDB oracle at sf0.001/0.01/0.1, and the
+    # winner, tie and NULL/NaN classes are pinned against a brute-force
+    # numpy reference in tests/test_round12_ops.py.
     return similarity.semantic_join(l, r, cents, nprobe=None)
 
 

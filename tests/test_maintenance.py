@@ -61,57 +61,6 @@ def test_dedup_increment(spark):
     assert kept == [11, 13]
 
 
-def test_merge_upsert_partitioned_prunes(spark, tmp_path):
-    """Only partitions containing updated keys are rewritten; untouched
-    partition files stay byte-identical on disk."""
-    import os
-
-    target = str(tmp_path / "pt")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01", 10.0), (2, "2024-01-01", 20.0),
-         (3, "2024-01-02", 30.0), (4, "2024-01-03", 40.0)],
-        "id long, day string, v double",
-    )
-    skew.write_partitioned(base, target, ["day"])
-    untouched = sorted(glob.glob(f"{target}/day=2024-01-03/part-*"))
-    mtimes_before = [os.path.getmtime(p) for p in untouched]
-
-    updates = spark.createDataFrame(
-        [(2, "2024-01-01", 99.0), (5, "2024-01-02", 50.0)],
-        "id long, day string, v double",
-    )
-    affected = skew.merge_upsert_partitioned(
-        spark, target, updates, ["id"], "day"
-    )
-    assert sorted(affected) == ["2024-01-01", "2024-01-02"]
-    # Partition-column type inference reads day= back as DATE; compare as str.
-    got = {
-        (r["id"], str(r["day"]), r["v"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {
-        (1, "2024-01-01", 10.0), (2, "2024-01-01", 99.0),
-        (3, "2024-01-02", 30.0), (5, "2024-01-02", 50.0),
-        (4, "2024-01-03", 40.0),
-    }
-    # The 01-03 partition was never rewritten: same files, same mtimes.
-    assert sorted(glob.glob(f"{target}/day=2024-01-03/part-*")) == untouched
-    assert [os.path.getmtime(p) for p in untouched] == mtimes_before
-
-
-def test_merge_upsert_partitioned_idempotent(spark, tmp_path):
-    target = str(tmp_path / "pt2")
-    base = spark.createDataFrame(
-        [(1, "a", 1.0)], "id long, grp string, v double"
-    )
-    skew.write_partitioned(base, target, ["grp"])
-    updates = spark.createDataFrame([(1, "a", 2.0)], "id long, grp string, v double")
-    skew.merge_upsert_partitioned(spark, target, updates, ["id"], "grp")
-    skew.merge_upsert_partitioned(spark, target, updates, ["id"], "grp")
-    rows = spark.read.parquet(target).collect()
-    assert len(rows) == 1 and rows[0]["v"] == 2.0
-
-
 def test_salted_join_rejects_right_outer(spark):
     import pytest
 
@@ -132,3 +81,27 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     # The reliable checkpoint actually landed on disk.
     assert glob.glob(str(tmp_path / "ckpt" / "*"))
+
+
+def test_checkpoint_round_read_back_starts_no_job(spark, tmp_path):
+    """A parquet checkpoint round starts one Spark job, the write: the
+    read-back takes its schema from the footer instead of inferring it."""
+    import uuid
+
+    truncate = dedup._round_truncator(
+        "cc", "0123456789ab", str(tmp_path / "ckpt")
+    )
+    df = spark.range(10)
+    sc = spark.sparkContext
+    group = f"truncate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "checkpoint round")
+    try:
+        back = truncate(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert back.schema == spark.read.parquet(
+        str(tmp_path / "ckpt" / "cc_0123456789ab_round_0")
+    ).schema
+    assert sorted(r["id"] for r in back.collect()) == list(range(10))

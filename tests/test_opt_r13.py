@@ -56,33 +56,52 @@ def test_common_neighbor_block_kernel_drops_null_endpoints(spark):
 
 
 def test_jaccard_keep_group_both_paths(spark):
+    """The blocked kernel, with and without ``keep_group``, equals the
+    unblocked inverted-index path filtered to same-group pairs."""
     rows = [
         (1, "alpha beta gamma", "s1"),
         (2, "alpha beta gamma delta", "s1"),
         (3, "alpha beta", "s1"),
+        (4, "alpha beta gamma", "s2"),   # cross-group twin of 1: no pair
         (10, "red green blue", "s2"),
         (11, "red green blue", "s2"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    for arrow_kernel in (True, False):
-        out = dedup.jaccard_pairs(
-            docs, group_col="source", threshold=0.5,
-            arrow_kernel=arrow_kernel, keep_group=True,
+    group = {i: g for i, _, g in rows}
+    ref = sorted(
+        (a, b, j)
+        for a, b, j in map(
+            tuple, dedup.jaccard_pairs(docs, threshold=0.5).collect()
         )
-        assert out.columns == ["id_a", "id_b", "jacc", "source"]
-        got = sorted(map(tuple, out.collect()))
-        base = sorted(
-            map(
-                tuple,
-                dedup.jaccard_pairs(
-                    docs, group_col="source", threshold=0.5,
-                    arrow_kernel=arrow_kernel,
-                ).collect(),
-            )
-        )
-        # same pairs/scores as without keep_group, block value appended
-        assert [(a, b, j) for a, b, j, _ in got] == base
-        assert all(g == ("s1" if a < 10 else "s2") for a, b, j, g in got)
+        if group[a] == group[b]
+    )
+    base = sorted(map(tuple, dedup.jaccard_pairs(
+        docs, group_col="source", threshold=0.5).collect()))
+    assert base == ref and len(ref) > 0
+    out = dedup.jaccard_pairs(
+        docs, group_col="source", threshold=0.5, keep_group=True
+    )
+    assert out.columns == ["id_a", "id_b", "jacc", "source"]
+    got = sorted(map(tuple, out.collect()))
+    # same pairs/scores as without keep_group, block value appended
+    assert [(a, b, j) for a, b, j, _ in got] == ref
+    assert all(g == group[a] for a, b, j, g in got)
+
+
+def test_jaccard_blocked_drops_null_group_and_null_id(spark):
+    """A NULL block key or a NULL id pairs with nothing, as in SQL's
+    ``a.grp = b.grp AND a.id < b.id``."""
+    rows = [
+        (1, "alpha beta gamma delta", None),
+        (2, "alpha beta gamma delta", None),
+        (3, "red green blue", "s"),
+        (4, "red green blue", "s"),
+        (None, "red green blue", "s"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    got = sorted(map(tuple, dedup.jaccard_pairs(
+        docs, group_col="source", threshold=0.5).collect()))
+    assert got == [(3, 4, 1.0)]
 
 
 def test_jaccard_keep_group_requires_group_col(spark):

@@ -14,64 +14,53 @@ from pyspark.sql import functions as F
 from ddataframeoperation_spark.operators import dedup, relational
 
 
-# --- numpy XXH64 reimplementation vs Spark's xxhash64 -------------------
+# --- minhash band table pinned against checksums -------------------------
 
 
-def test_np_xxh64_matches_spark(spark):
-    """The minhash Arrow kernel's hash family must be bit-for-bit Spark's
-    xxhash64 — long single-arg (seed 42), (long, int-literal) chains (the
-    per-seed signature hash), and 4-long chains (the band bucket)."""
-    import numpy as np
+def _band_checksum(table):
+    """(sum of xxhash64(id, band, bucket), rows) — order-free, and exact
+    as a decimal sum, so any changed bucket moves it."""
+    r = table.select(
+        F.sum(F.xxhash64("id", "band", "bucket").cast("decimal(38,0)")),
+        F.count("*"),
+    ).head()
+    return int(r[0]), r[1]
 
-    vals = [0, 1, -1, 42, 2**63 - 1, -(2**63), 123456789123456789,
-            -987654321987654321, 7, 0x9E3779B185EBCA87 - 2**64]
-    df = spark.createDataFrame([(v,) for v in vals], "h0 long")
-    rows = df.select(
-        "h0",
-        F.xxhash64("h0").alias("one"),
-        *[F.xxhash64("h0", F.lit(s)).alias(f"s{s}") for s in (0, 1, 5, 31)],
-        F.xxhash64("h0", "h0", "h0", "h0").alias("four"),
-    ).collect()
-    with np.errstate(over="ignore"):
-        for r in rows:
-            v = np.uint64(np.int64(r["h0"]))
-            base = dedup._np_xxh64_long(v, np.uint64(42))
-            assert np.int64(base) == r["one"]
-            for s in (0, 1, 5, 31):
-                assert np.int64(dedup._np_xxh64_int(s, base)) == r[f"s{s}"]
-            h = np.uint64(42)
-            for _ in range(4):
-                h = dedup._np_xxh64_long(v, h)
-            assert np.int64(h) == r["four"]
+
+def _rows_per_id(table):
+    return {r["id"]: r["count"] for r in table.groupBy("id").count().collect()}
 
 
 def test_minhash_band_table_arrow_matches_jvm(spark):
-    """Arrow signature kernel vs the pure-JVM aggregate: identical
-    (id, band, bucket) sets, including empty/short docs and NULL text."""
+    """The (id, band, bucket) table equals checksums captured while a
+    second, Arrow-kernel signature path existed and agreed with this one
+    bit for bit — including empty/short docs and NULL text. A NULL text
+    shingles to one empty shingle, so it gets the same band rows as the
+    empty document."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
             (2, "the quick brown fox jumps over the lazy cat"),
             (3, ""),               # empty -> single empty shingle
             (4, "one two"),        # shorter than shingle_n
-            (5, None),             # NULL text drops from both paths
+            (5, None),             # NULL text -> single empty shingle
             (6, "Repeated repeated REPEATED tokens tokens tokens here"),
         ],
         "doc_id long, text string",
     )
-    jvm = {tuple(r) for r in
-           dedup.minhash_band_table(docs, arrow_signature=False).collect()}
-    arrow = {tuple(r) for r in
-             dedup.minhash_band_table(docs, arrow_signature=True).collect()}
-    assert arrow == jvm
+    table = dedup.minhash_band_table(docs)
+    assert _band_checksum(table) == (5013281834341460083, 48)
+    assert _rows_per_id(table) == {i: 8 for i in range(1, 7)}
+    buckets = {}
+    for r in table.collect():
+        buckets.setdefault(r["id"], set()).add((r["band"], r["bucket"]))
+    assert buckets[5] == buckets[3]
     # non-default band geometry
-    jvm = {tuple(r) for r in dedup.minhash_band_table(
-        docs, num_hashes=16, bands=4, shingle_n=2, arrow_signature=False
-    ).collect()}
-    arrow = {tuple(r) for r in dedup.minhash_band_table(
-        docs, num_hashes=16, bands=4, shingle_n=2, arrow_signature=True
-    ).collect()}
-    assert arrow == jvm
+    table = dedup.minhash_band_table(
+        docs, num_hashes=16, bands=4, shingle_n=2
+    )
+    assert _band_checksum(table) == (1054184821439691650, 24)
+    assert _rows_per_id(table) == {i: 4 for i in range(1, 7)}
 
 
 def test_minhash_band_table_arrow_string_ids(spark):
@@ -79,11 +68,9 @@ def test_minhash_band_table_arrow_string_ids(spark):
         [("a", "alpha beta gamma delta"), ("b", "alpha beta gamma epsilon")],
         "doc_id string, text string",
     )
-    jvm = {tuple(r) for r in
-           dedup.minhash_band_table(docs, arrow_signature=False).collect()}
-    arrow = {tuple(r) for r in
-             dedup.minhash_band_table(docs, arrow_signature=True).collect()}
-    assert arrow == jvm
+    table = dedup.minhash_band_table(docs)
+    assert _band_checksum(table) == (-24365709868023818355, 16)
+    assert _rows_per_id(table) == {"a": 8, "b": 8}
 
 
 # --- connected_components single-task endgame ---------------------------
@@ -120,16 +107,18 @@ def test_cc_endgame_matches_loop_string_ids_and_nulls(spark):
     assert {i for i, _ in fast} == {"a", "b", "c", "x", "y"}
 
 
-# --- semantic_join kernel/fold parity ON THE FIXTURES (ADVICE r13) -------
+# --- semantic_join vs brute force ON THE FIXTURES (ADVICE r13) ----------
 
 
 def test_semantic_join_kernel_fold_parity_on_fixture(spark):
-    """b33_semantic_join pins the BLAS arrow kernel whose identity with
-    the sequential fold is empirical, not structural (a cosine near-tie
-    within ~1e-16 could flip a winner on a future fixture). Run BOTH
-    paths on the registered query's own probe (sf0.01 fixture) so a
-    fixture/data change surfaces as a parity failure here, not as an
-    opaque oracle hash mismatch."""
+    """b33_semantic_join runs the BLAS kernel, whose agreement with a
+    sequential score is empirical, not structural (a cosine near-tie
+    within ~1e-16 could flip a winner on a future fixture). Check it on
+    the registered query's own probe (sf0.01 fixture) against the
+    pairwise numpy reference, so a fixture/data change surfaces here,
+    not as an opaque oracle hash mismatch."""
+    from cosine_reference import assert_rounded, semantic_join_reference
+
     from ddataframeoperation_spark.catalog import read_fixture_table
     from ddataframeoperation_spark.operators import similarity
 
@@ -137,11 +126,17 @@ def test_semantic_join_kernel_fold_parity_on_fixture(spark):
     left = emb.filter(F.col("vec_id") < 250)
     right = emb.filter(F.col("vec_id") >= 250)
     cents = similarity.kmeans_centroids(emb, k=8, iters=5)
-    kern = {tuple(r) for r in similarity.semantic_join(
-        left, right, cents, nprobe=None, arrow_kernel=True).collect()}
-    fold = {tuple(r) for r in similarity.semantic_join(
-        left, right, cents, nprobe=None, arrow_kernel=False).collect()}
-    assert kern == fold
+    got = {r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
+           for r in similarity.semantic_join(
+               left, right, cents, nprobe=None).collect()}
+    want = semantic_join_reference(
+        [tuple(r) for r in left.select("vec_id", "embedding").collect()],
+        [tuple(r) for r in right.select("vec_id", "embedding").collect()],
+    )
+    assert got.keys() == want.keys() and len(got) > 0
+    for lid, (rid, cos) in got.items():
+        assert rid == want[lid][0], lid
+        assert_rounded(cos, want[lid][1])
 
 
 # --- binary-search bucket assign vs the filter-count lambda --------------

@@ -116,11 +116,12 @@ def test_semantic_join_null_score_never_wins(spark):
 
 
 def test_semantic_join_arrow_kernel_matches_fold(spark):
-    # The BLAS cogroup kernel (production default) and the sequential
-    # JVM fold (oracle-exact mode) must pick the same winners with the
-    # same 4dp scores — summation-order noise is ~1e-16, far below the
-    # rounding contract; ties break to the lower right id on both paths.
+    # The BLAS cogroup kernel must pick the winners and 4dp scores of
+    # the pairwise numpy reference — summation-order noise is ~1e-16,
+    # far below the rounding contract; ties break to the lower right id.
     import random
+
+    from cosine_reference import assert_rounded, semantic_join_reference
 
     from ddataframeoperation_spark.operators.similarity import (
         kmeans_centroids,
@@ -132,24 +133,24 @@ def test_semantic_join_arrow_kernel_matches_fold(spark):
         (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)
     ]
     # exact-duplicate vectors across the right side exercise the rid
-    # tiebreak on both paths
+    # tiebreak
     rows[60] = (60, list(rows[61][1]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     left = emb.filter(F.col("vec_id") < 20)
     right = emb.filter(F.col("vec_id") >= 20)
     cents = kmeans_centroids(emb, k=4, iters=3)
 
-    def key(df):
-        return {
-            r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
-            for r in df.collect()
-        }
-
-    fast = key(semantic_join(left, right, cents, nprobe=None))
-    exact = key(
-        semantic_join(left, right, cents, nprobe=None, arrow_kernel=False)
-    )
-    assert fast == exact and len(fast) == 20
+    got = {
+        r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
+        for r in semantic_join(left, right, cents, nprobe=None).collect()
+    }
+    want = semantic_join_reference(rows[:20], rows[20:])
+    assert got.keys() == want.keys() and len(got) == 20
+    for lid, (rid, cos) in got.items():
+        assert rid == want[lid][0], lid
+        assert_rounded(cos, want[lid][1])
+    # the duplicate pair never lets 61 beat 60
+    assert all(rid != 61 for rid, _ in got.values())
 
 
 # --------------------------------- rolling_origin_folds column clash
@@ -573,27 +574,29 @@ def test_run_id_validated_against_sweep_pattern(spark):
 def test_semantic_join_unscorable_group_nan_on_both_paths(spark):
     import math
 
+    from cosine_reference import semantic_join_reference
+
     from ddataframeoperation_spark.operators.similarity import semantic_join
 
     # Every candidate of the left row has a NULL element -> no scorable
-    # match. Kernel (NaN in matmul) and fold (NULL dot -> NaN coalesce)
-    # must AGREE: emit the row with cos_sim NaN, lowest-rid winner.
+    # match. The kernel (NaN in the matmul) must emit the row with
+    # cos_sim NaN and the lowest-rid winner, as the reference does.
+    left_rows = [(1, [1.0, 0.0])]
+    right_rows = [(8, [1.0, None]), (9, [None, 2.0])]
     left = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+        left_rows, "vec_id long, embedding array<double>"
     )
     right = spark.createDataFrame(
-        [(8, [1.0, None]), (9, [None, 2.0])],
-        "vec_id long, embedding array<double>",
+        right_rows, "vec_id long, embedding array<double>"
     )
-    for flag in (True, False):
-        out = semantic_join(
-            left, right, centroids=[[1.0, 0.0]], nprobe=1,
-            arrow_kernel=flag,
-        ).collect()
-        assert len(out) == 1, flag
-        row = out[0].asDict()
-        assert row["r_vec_id"] == 8, flag      # lowest-rid NaN tiebreak
-        assert math.isnan(row["cos_sim"]), flag
+    out = semantic_join(
+        left, right, centroids=[[1.0, 0.0]], nprobe=1
+    ).collect()
+    assert len(out) == 1
+    row = out[0].asDict()
+    rid, cos = semantic_join_reference(left_rows, right_rows)[1]
+    assert row["r_vec_id"] == rid == 8      # lowest-rid NaN tiebreak
+    assert math.isnan(row["cos_sim"]) and math.isnan(cos)
 
 
 def test_brier_decomposition_empty_input_yields_zero_rows(spark):

@@ -77,6 +77,8 @@ def test_binary_quantize_multiword_nulls_match_python(spark, seed):
 
 @pytest.mark.parametrize("seed", [5, 17])
 def test_semantic_join_arrow_fold_parity_random(spark, seed):
+    from cosine_reference import assert_rounded, semantic_join_reference
+
     from ddataframeoperation_spark.operators.similarity import (
         kmeans_centroids,
         semantic_join,
@@ -93,16 +95,15 @@ def test_semantic_join_arrow_fold_parity_random(spark, seed):
         emb.filter(F.col("vec_id") != 50), k=3, iters=2
     )
 
-    def key(flag):
-        return {
-            r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
-            for r in semantic_join(
-                left, right, cents, nprobe=None, arrow_kernel=flag
-            ).collect()
-        }
-
-    fast, exact = key(True), key(False)
-    assert fast == exact and len(fast) == 15
+    fast = {
+        r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
+        for r in semantic_join(left, right, cents, nprobe=None).collect()
+    }
+    exact = semantic_join_reference(rows[:15], rows[15:])
+    assert fast.keys() == exact.keys() and len(fast) == 15
+    for lid, (rid, cos) in fast.items():
+        assert rid == exact[lid][0], lid
+        assert_rounded(cos, exact[lid][1])
     # the NULL-element candidate never wins anywhere
     assert all(rid != 50 for rid, _ in fast.values())
 

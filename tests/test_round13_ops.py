@@ -417,56 +417,79 @@ class TestDegenerateEmbeddingContracts:
     def test_neardup_pairs_degenerates_match_nothing_both_kernels(
         self, spark
     ):
+        from cosine_reference import assert_rounded, neardup_pairs_reference
         from pyspark.sql import functions as F
 
         from ddataframeoperation_spark.operators.similarity import (
             cosine_neardup_pairs,
         )
 
-        df = self._emb(spark).withColumn(
-            "blk", F.lit(0)
+        df = self._emb(spark).withColumn("blk", F.lit(0))
+        got = {
+            (r["id_a"], r["id_b"]): r["cos_sim"]
+            for r in cosine_neardup_pairs(
+                df, threshold=0.9, block_col="blk"
+            ).collect()
+        }
+        want = neardup_pairs_reference(
+            [tuple(r) for r in df.collect()], threshold=0.9
         )
-        for kernel in (True, False):
-            got = sorted(
-                (r["id_a"], r["id_b"])
-                for r in cosine_neardup_pairs(
-                    df,
-                    threshold=0.9,
-                    block_col="blk",
-                    arrow_kernel=kernel,
-                ).collect()
-            )
-            # only the (1, 2) pair clears 0.9; rows 3/4/5 pair with
-            # nothing on BOTH scoring paths
-            assert got == [(1, 2)], f"arrow_kernel={kernel}: {got}"
+        # only the (1, 2) pair clears 0.9; rows 3/4/5 pair with nothing
+        assert got.keys() == want.keys() == {(1, 2)}
+        assert_rounded(got[(1, 2)], want[(1, 2)])
+
+    def test_neardup_pairs_drop_null_block_and_null_id(self, spark):
+        from ddataframeoperation_spark.operators.similarity import (
+            cosine_neardup_pairs,
+        )
+
+        # A NULL block key or a NULL id pairs with nothing, as in SQL's
+        # ``a.blk = b.blk AND a.id < b.id``.
+        df = spark.createDataFrame(
+            [
+                (1, [1.0, 0.0], None),
+                (2, [1.0, 0.0], None),
+                (3, [0.0, 1.0], "x"),
+                (4, [0.0, 1.0], "x"),
+                (None, [0.0, 1.0], "x"),
+            ],
+            "vec_id long, embedding array<double>, label string",
+        )
+        got = sorted(
+            map(tuple, cosine_neardup_pairs(
+                df, threshold=0.9, block_col="label"
+            ).collect())
+        )
+        assert got == [(3, 4, 1.0)]
 
     def test_semantic_join_zero_norm_left_emits_nan_not_crash(self, spark):
-        import math
+        from cosine_reference import assert_rounded, semantic_join_reference
 
         from ddataframeoperation_spark.operators.similarity import (
             semantic_join,
         )
 
+        left_rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0])]
+        right_rows = [(7, [1.0, 0.0]), (8, [0.0, 1.0])]
         left = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [0.0, 0.0])],
-            "vec_id long, embedding array<double>",
+            left_rows, "vec_id long, embedding array<double>"
         )
         right = spark.createDataFrame(
-            [(7, [1.0, 0.0]), (8, [0.0, 1.0])],
-            "vec_id long, embedding array<double>",
+            right_rows, "vec_id long, embedding array<double>"
         )
         cents = [[1.0, 0.0], [0.0, 1.0]]
-        for kernel in (True, False):
-            rows = {
-                r["l_vec_id"]: r
-                for r in semantic_join(
-                    left, right, cents, nprobe=2, arrow_kernel=kernel
-                ).collect()
-            }
-            assert rows[1]["r_vec_id"] == 7 and rows[1]["cos_sim"] == 1.0
-            # the zero-norm left row emits the documented NaN "no
-            # scorable candidate" marker — it must NOT raise
-            assert math.isnan(rows[2]["cos_sim"]), f"kernel={kernel}"
+        rows = {
+            r["l_vec_id"]: r
+            for r in semantic_join(left, right, cents, nprobe=2).collect()
+        }
+        want = semantic_join_reference(left_rows, right_rows)
+        assert rows.keys() == want.keys()
+        assert rows[1]["r_vec_id"] == 7 and rows[1]["cos_sim"] == 1.0
+        # the zero-norm left row emits the documented NaN "no scorable
+        # candidate" marker with the lowest right id — it must NOT raise
+        assert rows[2]["r_vec_id"] == want[2][0] == 7
+        for lid, (_, cos) in want.items():
+            assert_rounded(rows[lid]["cos_sim"], cos)
 
     def test_centroid_assign_degenerate_lands_cell0(self, spark):
         from pyspark.sql import functions as F

@@ -1210,54 +1210,6 @@ def test_containment_dedup_chain_of_mutuals_and_excerpt(spark):
     assert kept == {1, 4}
 
 
-# -------------------------------------------------------- write_training_shards
-
-
-def test_write_training_shards_roundtrip_matches_manifest(spark, tmp_path):
-    from ddataframeoperation_spark.operators.sampling import (
-        shard_manifest,
-        write_training_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i, float(i % 5)) for i in range(300)], "doc_id long, w double"
-    )
-    out = str(tmp_path / "shards")
-    persisted = {
-        r["shard"]: (r["n_docs"], r["total_tokens"], r["id_digest"])
-        for r in write_training_shards(
-            df, out, 8, ["doc_id"], token_col="w", salt="e1"
-        ).collect()
-    }
-    # The persisted manifest equals a fresh recomputation...
-    fresh = {
-        r["shard"]: (r["n_docs"], r["total_tokens"], r["id_digest"])
-        for r in shard_manifest(df, 8, ["doc_id"], token_col="w", salt="e1").collect()
-    }
-    assert persisted == fresh
-    # ...and the written data reproduces it shard by shard: recompute the
-    # manifest FROM THE WRITTEN FILES and compare (the reader-side check).
-    back = spark.read.parquet(f"{out}/data")
-    rebuilt = {
-        r["shard"]: (r["n_docs"], r["total_tokens"], r["id_digest"])
-        for r in shard_manifest(back, 8, ["doc_id"], token_col="w", salt="e1").collect()
-    }
-    assert rebuilt == persisted
-    assert sum(v[0] for v in persisted.values()) == 300
-
-
-def test_write_training_shards_partition_layout(spark, tmp_path):
-    import os
-
-    from ddataframeoperation_spark.operators.sampling import write_training_shards
-
-    df = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
-    out = str(tmp_path / "s2")
-    write_training_shards(df, out, 4, ["doc_id"])
-    dirs = {d for d in os.listdir(f"{out}/data") if d.startswith("shard=")}
-    assert dirs == {f"shard={i}" for i in range(4)}
-
-
 # ---------------------------------------------------------------- skipgram_pmi
 
 

@@ -55,68 +55,6 @@ def test_tumbling_multi_batch_replay(spark, sf_dir, tmp_path):
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
 
-def test_incremental_materialization_with_resume(spark, sf_dir, tmp_path):
-    """Materialize a rollup from 2 files, then drop 2 more files in and
-    resume from the same checkpoint — the final parquet must equal the
-    batch rollup over ALL data (incremental upsert + exactly-once)."""
-    import glob
-    import shutil
-
-    from ddataframeoperation_spark.streaming.materialize import (
-        materialize_tumbling_rollup,
-        read_rollup,
-    )
-
-    batch = read_fixture_table(spark, sf_dir, "events")
-    staged = str(tmp_path / "staged")
-    incoming = str(tmp_path / "incoming")
-    out = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-    batch.repartitionByRange(4, "ts").write.mode("overwrite").parquet(staged)
-    parts = sorted(glob.glob(f"{staged}/part-*"))
-    assert len(parts) == 4
-    import os
-
-    os.makedirs(incoming)
-    schema = spark.read.parquet(staged).schema
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(incoming)
-        )
-        materialize_tumbling_rollup(stream, out, ckpt)
-
-    # Phase 1: first two files.
-    for p in parts[:2]:
-        shutil.copy(p, incoming)
-    run()
-    n_phase1 = read_rollup(spark, out).count()
-    assert n_phase1 > 0
-
-    # Phase 2: remaining files arrive; resume from the same checkpoint.
-    for p in parts[2:]:
-        shutil.copy(p, incoming)
-    run()
-
-    got = {
-        (str(r["window_start"]), r["n_events"], r["sum_value"])
-        for r in read_rollup(spark, out).collect()
-    }
-    want = {
-        (str(r["window_start"]), r["n_events"], r["sum_value"])
-        for r in batch.groupBy(F.window("ts", "1 hour").alias("win"))
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(F.col("win.start").alias("window_start"), "n_events", "sum_value")
-        .collect()
-    }
-    assert got == want
-
-
 def test_session_window_drops_late_data(spark, tmp_path):
     """Append-mode session windows: an event arriving behind the watermark
     must be dropped, and a session is emitted only once the watermark

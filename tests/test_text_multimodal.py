@@ -52,33 +52,6 @@ def test_media_metadata_prunes_payload(spark):
     assert stats[0]["total_bytes"] == 6
 
 
-def test_resize_passthrough_shape(spark):
-    rows = [(1, bytearray(b"abcdef"))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = multimodal.resize_images(df, width=64, height=32).head()
-    assert (out["width"], out["height"]) == (64, 32)
-    assert bytes(out["payload"]) == b"abcdef"
-
-
-def test_frame_sampling_explodes(spark):
-    rows = [(1, bytearray(bytes(100))), (2, None)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = multimodal.sample_video_frames(df, every_nth=10, max_frames=8).collect()
-    ids = {r["media_id"] for r in out}
-    assert ids == {1}  # null payload yields no frames
-    assert len(out) == 8
-    assert sorted(r["frame_no"] for r in out) == list(range(8))
-
-
-def test_feature_extraction_shape(spark):
-    rows = [(1, bytearray(bytes(range(64))))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = multimodal.extract_image_features(df, dim=8).head()
-    assert len(out["feature"]) == 8
-    norm = sum(x * x for x in out["feature"]) ** 0.5
-    assert abs(norm - 1.0) < 1e-5
-
-
 def test_word_ngrams_short_doc_guard(spark):
     # sequence(1, stop) descends for stop < 1 — the guard must yield [] for
     # docs shorter than n, not bogus offsets.
