@@ -18,7 +18,8 @@ rebuilt Spark-first:
 
 Everything is declarative DataFrame/SQL so Catalyst handles pushdown,
 pruning, join strategy, and AQE; Python UDFs appear only where Spark
-builtins cannot express the semantics (multimodal decode stubs).
+builtins cannot express the semantics (user scripts and a few
+vectorized numpy kernels).
 """
 
 from ddataframeoperation_spark.session import get_spark

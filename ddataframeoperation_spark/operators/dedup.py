@@ -162,7 +162,9 @@ def minhash_band_table(
     """(id, band, bucket) banded-MinHash table — the LSH index itself.
 
     Explode shingles (JVM: tokenization, shingling and the one
-    variable-length string hash stay codegen'd), then build the k-seed
+    variable-length string hash stay codegen'd) and drop the empty
+    shingle that NULL or empty text yields, so such a document gets no
+    band rows and is never a candidate; then build the k-seed
     signature. The variable-length shingle hashes to a long ONCE; the k
     hash family re-hashes the 8-byte long per seed (cheaper than k string
     hashes when shingles are long). At 100 TB this table is what you
@@ -185,6 +187,7 @@ def minhash_band_table(
             F.col(id_col).alias("id"),
             F.explode(ngram_shingles(F.col("_toks"), shingle_n)).alias("sh"),
         )
+        .filter(F.col("sh") != "")
         .select("id", F.xxhash64("sh").alias("h0"))
     )
     sig = exploded.groupBy("id").agg(
@@ -604,19 +607,11 @@ def connected_components(
 
 def _cc_block_kernel(pairs: DataFrame, block_col: str) -> DataFrame:
     """Blocked connected components (see :func:`connected_components`):
-    one grouped Arrow kernel per block; vectorized min-label propagation
-    with pointer jumping over the block's edge arrays.
-
-    Exactness: labels start as each node's own index (np.unique sorts,
-    so index order == id order and min index == min id); each sweep
-    takes the min over every edge's endpoint labels (`np.minimum.at`,
-    both directions) then pointer-jumps (`l[l]`) to a fixpoint — the
-    classic hook+shortcut, converging to the component MINIMUM in
-    O(log diameter) in-memory sweeps. NULL-endpoint pairs are dropped
-    whole (the generic path's contract); duplicate/self-loop edges are
-    idempotent under min.
+    one grouped Arrow kernel per block running
+    :func:`_np_min_label_components` over the block's edge arrays, so each
+    block's component is its minimum id. NULL-endpoint pairs are dropped
+    whole (the generic path's contract).
     """
-    import numpy as np
     import pandas as pd
 
     id_type = dict(pairs.dtypes)["id_a"]
@@ -627,25 +622,10 @@ def _cc_block_kernel(pairs: DataFrame, block_col: str) -> DataFrame:
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
             return pd.DataFrame({"id": [], "component": []})
-        a = pdf["id_a"].to_numpy()
-        b = pdf["id_b"].to_numpy()
-        ids = np.unique(np.concatenate([a, b]))
-        ia = np.searchsorted(ids, a)
-        ib = np.searchsorted(ids, b)
-        labels = np.arange(len(ids), dtype=np.int64)
-        while True:
-            nxt = labels.copy()
-            np.minimum.at(nxt, ia, labels[ib])
-            np.minimum.at(nxt, ib, labels[ia])
-            while True:
-                jumped = nxt[nxt]
-                if np.array_equal(jumped, nxt):
-                    break
-                nxt = jumped
-            if np.array_equal(nxt, labels):
-                break
-            labels = nxt
-        return pd.DataFrame({"id": ids, "component": ids[labels]})
+        ids, comp = _np_min_label_components(
+            pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy()
+        )
+        return pd.DataFrame({"id": ids, "component": comp})
 
     from ddataframeoperation_spark.operators.script import apply_script_grouped
 

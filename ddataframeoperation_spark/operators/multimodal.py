@@ -2,33 +2,19 @@
 
 SURVEY.md north-star item: treat media as opaque ``binary`` columns with
 typed metadata; ingestion, metadata, fingerprints and payload near-dup
-candidates are plain JVM columns. ``decode_image_batch`` is the one
-Arrow-batched ``mapInPandas`` kernel; no media library is available, so
-it is a clearly-marked stub that derives dimensions from the payload
-length — the Spark-side plumbing (schema, batch shape, partitioning,
-UDF signature) is real and tested.
+candidates are plain JVM columns. There is no decode step: no media
+library is available to decode with.
 
 Scale notes (100 TB of media):
-- binary payloads ride in parquet; metadata columns (format, width, ...)
+- binary payloads ride in parquet; metadata columns (format, n_bytes, ...)
   are scalar so filters on them prune row groups *without touching bytes*;
-- ``mapInPandas`` streams Arrow record batches — peak memory is one batch,
-  not one partition; batch size bounded by
-  ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-- decode is per-row independent → embarrassingly parallel, no shuffle;
-- decode PARALLELISM equals the scan's split count (``mapInPandas``
-  inherits upstream partitioning — there is no group key to repartition
-  on, and shuffling binary payloads just to raise local parallelism is
-  the wrong trade). At 100 TB thousands of file splits saturate any
-  cluster; for a small-file corpus on a big machine, lower
-  ``spark.sql.files.maxPartitionBytes`` so the scan itself yields more
-  splits — contrast with the GROUPED-map operators, which repartition on
-  their group keys (`script.grouped_map_parallelism`) because AQE would
-  otherwise coalesce their exchange.
+- every operator here is per-row independent or a fingerprint equi-join,
+  so parallelism is the scan's split count; for a small-file corpus on a
+  big machine, lower ``spark.sql.files.maxPartitionBytes`` so the scan
+  itself yields more splits.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,7 +24,6 @@ __all__ = [
     "MEDIA_SCHEMA",
     "attach_media_metadata",
     "media_stats",
-    "decode_image_batch",
     "read_binary_files",
     "media_fingerprint",
     "media_neardup_candidates",
@@ -78,35 +63,6 @@ def media_stats(df: DataFrame, group_col: str = "media_type") -> DataFrame:
         F.round(F.avg("n_bytes"), 4).alias("avg_bytes"),
         F.countDistinct("checksum").cast("long").alias("distinct_payloads"),
     )
-
-
-#: Output schema of the decode step.
-DECODED_SCHEMA = "media_id bigint, width int, height int, n_pixels bigint"
-
-
-def decode_image_batch(df: DataFrame) -> DataFrame:
-    """Decode stub over ``mapInPandas``: real Arrow plumbing, fake kernel.
-
-    A real deployment drops PIL/ffmpeg into ``_decode_one`` unchanged —
-    batch iteration, schema declaration, and column pruning stay identical.
-    """
-    import pandas as pd  # local import: executors need it, driver may not
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = pd.DataFrame()
-            out["media_id"] = pdf["media_id"]
-            # STUB: deterministic fake decode — derive dims from payload
-            # length. Replace with e.g. PIL.Image.open(io.BytesIO(b)).
-            sizes = pdf["payload"].map(lambda b: len(b) if b is not None else 0)
-            out["width"] = (sizes % 640 + 1).astype("int32")
-            out["height"] = (sizes % 480 + 1).astype("int32")
-            out["n_pixels"] = (out["width"].astype("int64") * out["height"]).astype(
-                "int64"
-            )
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(_decode, DECODED_SCHEMA)
 
 
 def read_binary_files(

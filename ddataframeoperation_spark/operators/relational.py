@@ -1469,7 +1469,7 @@ def _bucket_by_cuts(
     fixed-length cut array (r14, guide §4): one ⌈log2(n_cuts+1)⌉-step
     ``aggregate`` fold with O(1) ``try_element_at`` probes instead of the
     O(n_cuts) ``size(filter(cuts, x -> v > x))`` lambda — 9 interpreted
-    steps per value instead of 511 at the default 512 buckets. (An
+    steps per value instead of 511 at ``_RANK_BUCKETS`` = 512. (An
     unrolled when/element_at chain was tried first: codegen-friendly but
     the optimizer inlines the chained projections into a 3^depth
     expression tree — measured ~4.5 s of Catalyst time PER PLAN, re-paid
@@ -1513,12 +1513,75 @@ def _bucket_by_cuts(
     )
 
 
+#: Bucket count of the rank-statistics family's two-level prefix sums.
+#: The percentile cut points only balance the per-bucket windows (the
+#: sums are exact for any count), so this is a constant, not an option.
+_RANK_BUCKETS = 512
+
+
+def _cumulative_by_value(
+    per: DataFrame, sums: Sequence[str], descending: bool = False
+) -> "tuple[DataFrame, DataFrame]":
+    """Exact inclusive cumulative sums in ``_v`` order with no global
+    sort — the machinery under rank_sum_test, ks_test, auc_exact,
+    pr_auc_exact and weighted_percentiles (and the two-level prefix-sum
+    shape of token_budget_mix/equidepth, applied to order statistics).
+
+    ``per`` holds one row per distinct ``_v`` and the long columns named
+    in ``sums``. Approximate percentile cut points (broadcast scalars —
+    they only balance the buckets, correctness never depends on them)
+    give each value a bucket row-locally; the cross-bucket offset is a
+    window over the ≤``_RANK_BUCKETS``-row bucket-total table (bounded by
+    construction — the plan-audit allowlist class), the within-bucket
+    prefix is a window PARTITIONED by bucket, and the offsets meet the
+    values in a broadcast join. All of it is long addition, so the sums
+    are exact. ``descending`` accumulates from the largest ``_v`` down.
+
+    Returns ``(cum, totals)``: ``per`` plus a ``<name>_cum`` column per
+    sum (the sum over every value at or before this one), and the
+    bucket-total table (``_bkt`` plus each sum under its own name).
+    """
+    from pyspark.sql import Window
+
+    probs = [i / _RANK_BUCKETS for i in range(1, _RANK_BUCKETS)]
+    cuts = per.agg(F.percentile_approx("_v", probs, 10_000).alias("_cuts"))
+    bucketed = _bucket_by_cuts(
+        per, cuts, "_v", "_cuts", _RANK_BUCKETS - 1, "_bkt"
+    )
+    order = F.desc if descending else F.asc
+    totals = bucketed.groupBy("_bkt").agg(*[F.sum(c).alias(c) for c in sums])
+    wb = Window.orderBy(order("_bkt")).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offsets = totals.select(
+        "_bkt",
+        *[
+            F.coalesce(F.sum(c).over(wb), F.lit(0)).cast("long").alias(c + "_off")
+            for c in sums
+        ],
+    )
+    ww = (
+        Window.partitionBy("_bkt")
+        .orderBy(order("_v"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    prefix = [F.sum(c).over(ww).cast("long").alias(c + "_pre") for c in sums]
+    cum = (
+        bucketed.select("*", *prefix)
+        .join(F.broadcast(offsets), on="_bkt")
+        .select(
+            *per.columns,
+            *[(F.col(c + "_off") + F.col(c + "_pre")).alias(c + "_cum") for c in sums],
+        )
+    )
+    return cum, totals
+
+
 def rank_sum_test(
     df: DataFrame,
     group_col: str | Column,
     value_col: str | Column,
     group_a: str,
-    buckets: int = 512,
     ndigits: int = 4,
 ) -> DataFrame:
     """B11 — Mann-Whitney/Wilcoxon rank-sum test between two cohorts
@@ -1526,16 +1589,10 @@ def rank_sum_test(
     stochastically dominate B's"), with EXACT tie-corrected average
     ranks — computed WITHOUT a global sort.
 
-    The scale shape (the two-level prefix-sum machinery of
-    token_budget_mix/equidepth, applied to order statistics): values
-    reduce to per-DISTINCT-value counts first (one aggregate); approx
-    percentile cut points (broadcast scalars — they only balance the
-    buckets, correctness never depends on them) assign each distinct
-    value a bucket row-locally; the cross-bucket offset is a window
-    over the ≤``buckets``-row bucket-total table (bounded by
-    construction), and the within-bucket prefix is a window PARTITIONED
-    by bucket. Average ranks come out exact: rank_avg(v) =
-    #less(v) + (#eq(v)+1)/2.
+    The scale shape: values reduce to per-DISTINCT-value counts first
+    (one aggregate), and :func:`_cumulative_by_value` gives each value
+    its exact cumulative count; #less(v) is that count minus #eq(v), so
+    average ranks come out exact: rank_avg(v) = #less(v) + (#eq(v)+1)/2.
 
     Engine-exactness (§20 rules): ranks are carried DOUBLED as exact
     longs (average ranks are half-integers), every statistic is a sum
@@ -1548,10 +1605,6 @@ def rank_sum_test(
     are excluded; z is NULL when either cohort is empty or all values
     tie (zero variance).
     """
-    if buckets < 1:
-        raise ValueError("buckets must be >= 1")
-    from pyspark.sql import Window
-
     g = (F.col(group_col) if isinstance(group_col, str) else group_col)
     v = (F.col(value_col) if isinstance(value_col, str) else value_col)
     base = df.select(g.alias("_g"), v.alias("_v")).filter(
@@ -1561,41 +1614,11 @@ def rank_sum_test(
         F.count("*").cast("long").alias("_c"),
         F.sum((F.col("_g") == group_a).cast("long")).alias("_ca"),
     )
-    if buckets == 1:
-        # Degenerate single-bucket mode (used by the invariance test):
-        # no cut points, everything in bucket 0 — one partition does the
-        # whole prefix, exactly the cost profile bucketing exists to avoid.
-        bucketed = per.withColumn("_bkt", F.lit(0))
-    else:
-        probs = [i / buckets for i in range(1, buckets)]
-        cuts = per.agg(
-            F.percentile_approx("_v", probs, 10_000).alias("_cuts")
-        )
-        bucketed = _bucket_by_cuts(
-            per, cuts, "_v", "_cuts", buckets - 1, "_bkt"
-        )
-    # Cross-bucket offsets: a window over the <=buckets-row totals table
-    # (bounded by construction — the plan-audit allowlist class).
-    btot = bucketed.groupBy("_bkt").agg(F.sum("_c").alias("_bc"))
-    wb = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.withColumn(
-        "_off", F.coalesce(F.sum("_bc").over(wb), F.lit(0)).cast("long")
-    ).select("_bkt", "_off")
-    ww = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = (
-        bucketed.withColumn(
-            "_pre", F.coalesce(F.sum("_c").over(ww), F.lit(0)).cast("long")
-        )
-        .join(F.broadcast(boff), on="_bkt")
-        # rank2 = twice the average rank — an exact long.
-        .withColumn(
-            "_rank2",
-            2 * (F.col("_off") + F.col("_pre")) + F.col("_c") + F.lit(1),
-        )
+    cum, _ = _cumulative_by_value(per, ["_c"])
+    # rank2 = twice the average rank — an exact long:
+    # 2·#less + #eq + 1 with #less = cum − #eq.
+    ranked = cum.withColumn(
+        "_rank2", 2 * F.col("_c_cum") - F.col("_c") + F.lit(1)
     )
     stats = ranked.agg(
         F.sum("_ca").cast("long").alias("_n1"),
@@ -1641,7 +1664,6 @@ def ks_test(
     group_col: str | Column,
     value_col: str | Column,
     group_a: str,
-    buckets: int = 512,
     ndigits: int = 4,
 ) -> DataFrame:
     """B11 — two-sample Kolmogorov-Smirnov distance: D = max over the
@@ -1651,7 +1673,7 @@ def ks_test(
 
     Same scale machinery as :func:`rank_sum_test` (exact global order
     statistics, no global sort): per-distinct-value counts per cohort,
-    bucketed two-level prefix sums give each value its exact cumulative
+    :func:`_cumulative_by_value` gives each value its exact cumulative
     count per cohort, and D is one max-aggregate over
     |cumA/n1 − cumB/n2|. The ECDF ratios are exact-integer quotients in
     an identically-written expression — bit-identical cross-engine; the
@@ -1659,10 +1681,6 @@ def ks_test(
 
     Returns one row: (n_a, n_b, ks_d). NULL when a cohort is empty.
     """
-    if buckets < 1:
-        raise ValueError("buckets must be >= 1")
-    from pyspark.sql import Window
-
     g = (F.col(group_col) if isinstance(group_col, str) else group_col)
     v = (F.col(value_col) if isinstance(value_col, str) else value_col)
     base = df.select(g.alias("_g"), v.alias("_v")).filter(
@@ -1672,39 +1690,7 @@ def ks_test(
         F.sum((F.col("_g") == group_a).cast("long")).alias("_ca"),
         F.sum((F.col("_g") != group_a).cast("long")).alias("_cb"),
     )
-    if buckets == 1:
-        bucketed = per.withColumn("_bkt", F.lit(0))
-    else:
-        probs = [i / buckets for i in range(1, buckets)]
-        cuts = per.agg(
-            F.percentile_approx("_v", probs, 10_000).alias("_cuts")
-        )
-        bucketed = _bucket_by_cuts(
-            per, cuts, "_v", "_cuts", buckets - 1, "_bkt"
-        )
-    btot = bucketed.groupBy("_bkt").agg(
-        F.sum("_ca").alias("_ba"), F.sum("_cb").alias("_bb")
-    )
-    wb = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "_bkt",
-        F.coalesce(F.sum("_ba").over(wb), F.lit(0)).cast("long").alias("_offa"),
-        F.coalesce(F.sum("_bb").over(wb), F.lit(0)).cast("long").alias("_offb"),
-    )
-    ww = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        bucketed.withColumn("_pa", F.sum("_ca").over(ww).cast("long"))
-        .withColumn("_pb", F.sum("_cb").over(ww).cast("long"))
-        .join(F.broadcast(boff), on="_bkt")
-        .select(
-            (F.col("_offa") + F.col("_pa")).alias("_cuma"),
-            (F.col("_offb") + F.col("_pb")).alias("_cumb"),
-        )
-    )
+    cum, _ = _cumulative_by_value(per, ["_ca", "_cb"])
     # Cohort totals from the per-distinct-value table, NOT a base
     # re-scan (r14, guide §2.4 — the weighted_percentiles W fix): the
     # sums of per-value counts ARE n1/n2 exactly (integer addition,
@@ -1721,8 +1707,8 @@ def ks_test(
     # (Spark 4 default) plain division would kill the job instead of
     # reaching that guard's NULL ks_d.
     d = F.abs(
-        F.try_divide(F.col("_cuma").cast("double"), F.col("_n1").cast("double"))
-        - F.try_divide(F.col("_cumb").cast("double"), F.col("_n2").cast("double"))
+        F.try_divide(F.col("_ca_cum").cast("double"), F.col("_n1").cast("double"))
+        - F.try_divide(F.col("_cb_cum").cast("double"), F.col("_n2").cast("double"))
     )
     return j.groupBy().agg(
         F.first("_n1").alias("n_a"),
@@ -2186,7 +2172,6 @@ def auc_exact(
     df: DataFrame,
     score_col: str | Column,
     label_col: str | Column,
-    buckets: int = 512,
 ) -> DataFrame:
     """B28 — EXACT ROC-AUC in integer basis points, computed from the
     rank-sum machinery (:func:`rank_sum_test`): AUC is the normalized
@@ -2207,17 +2192,12 @@ def auc_exact(
                       product overflows int64 long before AUC does.
                       5000 = random ranking, 10000 = perfect.
 
-    No global sort (the rank_sum shape): per-distinct-score counts,
-    broadcast cut points, bucket-partitioned prefix windows + a
-    bounded cross-bucket offset table. All-integer output — no float
-    enters at any point, so the value is bit-identical on any engine
+    No global sort (the rank_sum shape): per-distinct-score counts
+    ranked through :func:`_cumulative_by_value`. All-integer output — no
+    float enters at any point, so the value is bit-identical on any engine
     and any partial-aggregation order. NULL scores/labels drop;
     either cohort empty ⇒ auc_bp NULL (undefined, loudly).
     """
-    if buckets < 1:
-        raise ValueError("buckets must be >= 1")
-    from pyspark.sql import Window
-
     sc = F.col(score_col) if isinstance(score_col, str) else score_col
     lb = F.col(label_col) if isinstance(label_col, str) else label_col
     base = df.select(
@@ -2227,35 +2207,9 @@ def auc_exact(
         F.count("*").cast("long").alias("_c"),
         F.sum(F.col("_y").cast("long")).alias("_ca"),
     )
-    if buckets == 1:
-        bucketed = per.withColumn("_bkt", F.lit(0))
-    else:
-        probs = [i / buckets for i in range(1, buckets)]
-        cuts = per.agg(
-            F.percentile_approx("_v", probs, 10_000).alias("_cuts")
-        )
-        bucketed = _bucket_by_cuts(
-            per, cuts, "_v", "_cuts", buckets - 1, "_bkt"
-        )
-    btot = bucketed.groupBy("_bkt").agg(F.sum("_c").alias("_bc"))
-    wb = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.withColumn(
-        "_off", F.coalesce(F.sum("_bc").over(wb), F.lit(0)).cast("long")
-    ).select("_bkt", "_off")
-    ww = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = (
-        bucketed.withColumn(
-            "_pre", F.coalesce(F.sum("_c").over(ww), F.lit(0)).cast("long")
-        )
-        .join(F.broadcast(boff), on="_bkt")
-        .withColumn(
-            "_rank2",
-            2 * (F.col("_off") + F.col("_pre")) + F.col("_c") + F.lit(1),
-        )
+    cum, _ = _cumulative_by_value(per, ["_c"])
+    ranked = cum.withColumn(
+        "_rank2", 2 * F.col("_c_cum") - F.col("_c") + F.lit(1)
     )
     stats = ranked.agg(
         F.sum("_ca").cast("long").alias("n_pos"),
@@ -2283,7 +2237,6 @@ def pr_auc_exact(
     df: DataFrame,
     score_col: str | Column,
     label_col: str | Column,
-    buckets: int = 512,
 ) -> DataFrame:
     """B28 — PR-AUC (average precision) in integer basis points from the
     same no-global-sort rank machinery as :func:`auc_exact`, completing
@@ -2319,16 +2272,11 @@ def pr_auc_exact(
                       classifier AP baseline to read ap_bp against
 
     Plan shape (the auc_exact twin, order flipped): per-distinct-score
-    counts, broadcast percentile cut points, bucket-partitioned
-    DESCENDING prefix windows + a bounded cross-bucket offset table —
+    counts through :func:`_cumulative_by_value` in DESCENDING order —
     global order statistics with no global sort, no unpartitioned
     window over data-sized input. NULL scores/labels drop; an empty
     positive cohort ⇒ ap_bp NULL (undefined, loudly).
     """
-    if buckets < 1:
-        raise ValueError("buckets must be >= 1")
-    from pyspark.sql import Window
-
     sc = F.col(score_col) if isinstance(score_col, str) else score_col
     lb = F.col(label_col) if isinstance(label_col, str) else label_col
     base = df.select(
@@ -2338,47 +2286,12 @@ def pr_auc_exact(
         F.count("*").cast("long").alias("_c"),
         F.sum(F.col("_y").cast("long")).alias("_ca"),
     )
-    if buckets == 1:
-        bucketed = per.withColumn("_bkt", F.lit(0))
-    else:
-        probs = [i / buckets for i in range(1, buckets)]
-        cuts = per.agg(
-            F.percentile_approx("_v", probs, 10_000).alias("_cuts")
-        )
-        bucketed = _bucket_by_cuts(
-            per, cuts, "_v", "_cuts", buckets - 1, "_bkt"
-        )
-    btot = bucketed.groupBy("_bkt").agg(
-        F.sum("_c").alias("_bc"), F.sum("_ca").alias("_bca")
-    )
-    # Offsets of all HIGHER buckets (descending order: higher score first).
-    wb = (
-        Window.orderBy(F.desc("_bkt"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    boff = btot.select(
-        "_bkt",
-        F.coalesce(F.sum("_bc").over(wb), F.lit(0)).cast("long").alias("_offc"),
-        F.coalesce(F.sum("_bca").over(wb), F.lit(0))
-        .cast("long")
-        .alias("_offca"),
-    )
-    # Within-bucket descending prefix INCLUDING the current row.
-    ww = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.desc("_v"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = (
-        bucketed.withColumn("_prec", F.sum("_c").over(ww).cast("long"))
-        .withColumn("_preca", F.sum("_ca").over(ww).cast("long"))
-        .join(F.broadcast(boff), on="_bkt")
-        .select(
-            "_c",
-            "_ca",
-            (F.col("_offc") + F.col("_prec")).alias("cum_n"),
-            (F.col("_offca") + F.col("_preca")).alias("cum_pos"),
-        )
+    cum, _ = _cumulative_by_value(per, ["_c", "_ca"], descending=True)
+    ranked = cum.select(
+        "_c",
+        "_ca",
+        F.col("_c_cum").alias("cum_n"),
+        F.col("_ca_cum").alias("cum_pos"),
     )
     term = F.expr(
         "(CAST(_ca AS DECIMAL(38,0)) * cum_pos * 100000000) div cum_n"
@@ -2494,7 +2407,6 @@ def weighted_percentiles(
     value_col: str | Column,
     weight_col: str | Column,
     probs_bp: "Sequence[int]",
-    buckets: int = 512,
 ) -> DataFrame:
     """B11 — EXACT weighted percentiles with no global sort: the
     weighted p-quantile is the smallest value whose cumulative weight
@@ -2521,76 +2433,45 @@ def weighted_percentiles(
     quantile).
 
     Plan (the rank_sum/ks/auc machinery): per-distinct-value weight
-    sums (map-side combined), broadcast percentile cut points,
-    bucket-partitioned ASC prefix windows + a <=buckets-row
-    cross-bucket offset table, then each requested p filters the
-    distinct-value table and takes one min — global order statistics
+    sums (map-side combined) through :func:`_cumulative_by_value`, then
+    one aggregate selects every requested p — global order statistics
     with per-bucket parallelism throughout.
     """
     if not probs_bp:
         raise ValueError("probs_bp must be non-empty")
     if any(not 0 < int(p) <= 10000 for p in probs_bp):
         raise ValueError("probs_bp entries must be in (0, 10000]")
-    if buckets < 1:
-        raise ValueError("buckets must be >= 1")
-    from pyspark.sql import Window
-
     vc = F.col(value_col) if isinstance(value_col, str) else value_col
     wc = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     base = df.select(
         vc.alias("_v"), wc.cast("long").alias("_w")
     ).filter(F.col("_v").isNotNull() & (F.col("_w") > 0))
     per = base.groupBy("_v").agg(F.sum("_w").cast("long").alias("_pw"))
-    if buckets == 1:
-        bucketed = per.withColumn("_bkt", F.lit(0))
-    else:
-        pr = [i / buckets for i in range(1, buckets)]
-        cuts = per.agg(
-            F.percentile_approx("_v", pr, 10_000).alias("_cuts")
-        )
-        bucketed = _bucket_by_cuts(
-            per, cuts, "_v", "_cuts", buckets - 1, "_bkt"
-        )
-    btot = bucketed.groupBy("_bkt").agg(F.sum("_pw").alias("_bw"))
-    wb = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "_bkt",
-        F.coalesce(F.sum("_bw").over(wb), F.lit(0)).cast("long").alias("_off"),
-    )
-    ww = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        bucketed.withColumn("_pre", F.sum("_pw").over(ww).cast("long"))
-        .join(F.broadcast(boff), on="_bkt")
-        .select("_v", (F.col("_off") + F.col("_pre")).alias("_cw"))
-    )
+    cum, totals = _cumulative_by_value(per, ["_pw"])
     # r13 optimization (guide §2.4 / §1.2): ONE pass for every requested
     # percentile. The former per-``p`` filter→agg→union re-traversed the
     # whole cum table (and its upstream windows) once per percentile,
     # and the total weight re-scanned ``base``; now W comes from the
-    # ≤buckets-row bucket-total table (the same long sum, grouped) and a
+    # ≤_RANK_BUCKETS-row bucket-total table (the same long sum, grouped) and a
     # single aggregate computes every quantile via a conditional min_by
     # (rows below the threshold contribute a NULL ordering key, which
     # min_by ignores). Values identical — same left-continuous inverse-
     # CDF selection per p; output rows emitted in probs_bp order via one
     # inline() over the aggregate row. Measured 3 probs: 3 traversals +
     # a base re-scan → 1 traversal (1.1 s → 0.5 s warm at sf0.1).
-    total = btot.agg(F.sum("_bw").cast("long").alias("_W"))
+    total = totals.agg(F.sum("_pw").cast("long").alias("_W"))
     j = cum.crossJoin(F.broadcast(total))
     aggs = []
     for p in probs_bp:
         cond = F.expr(
-            f"CAST(_cw AS DECIMAL(38,0)) * 10000"
+            f"CAST(_pw_cum AS DECIMAL(38,0)) * 10000"
             f" >= CAST(_W AS DECIMAL(38,0)) * {int(p)}"
         )
         aggs.append(
             F.min_by(
                 F.struct(
                     F.col("_v").alias("value"),
-                    F.col("_cw").alias("cum_weight"),
+                    F.col("_pw_cum").alias("cum_weight"),
                 ),
                 F.when(cond, F.col("_v")),
             ).alias(f"_hit_{int(p)}")

@@ -2827,25 +2827,6 @@ def bmm(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @_q(
-    "bmm_decode_stub",
-    """
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) % 640 + 1 AS INTEGER) AS width,
-           CAST(octet_length(encode(text)) % 480 + 1 AS INTEGER) AS height,
-           CAST((octet_length(encode(text)) % 640 + 1)
-                * (octet_length(encode(text)) % 480 + 1) AS BIGINT) AS n_pixels
-    FROM documents
-    """,
-)
-def bmmd(spark: SparkSession, sf: str) -> DataFrame:
-    docs = _t(spark, sf, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-    return multimodal.decode_image_batch(docs)
-
-
-@_q(
     "bmm_media_neardup",
     """
     WITH media AS (

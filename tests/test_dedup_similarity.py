@@ -90,9 +90,30 @@ def test_dedup_pipeline_survives_empty_text(spark):
     # All-empty normalized texts share a fingerprint -> one survivor.
     kept = sorted(r["doc_id"] for r in dedup.dedup_by_fingerprint(df).collect())
     assert kept == [1, 4]
-    assert dedup.minhash_candidates(df).count() >= 1  # 1-2-3 collide
+    # Empty normalized texts have no shingles, hence no band rows.
+    assert dedup.minhash_candidates(df).count() == 0
     assert dedup.simhash_candidates(df, max_hamming=0).count() >= 1
     assert dedup.jaccard_pairs(df, threshold=0.9).count() >= 0  # no crash
+
+
+def test_minhash_candidates_skip_null_and_empty_text(spark):
+    """NULL-text and empty documents share no shingle, so they are never
+    candidates of each other (nor of anything else), while a real
+    duplicate pair still is."""
+    rows = [
+        (1, None),
+        (2, None),
+        (3, ""),
+        (4, ""),
+        (5, "the quick brown fox jumps over the lazy dog"),
+        (6, "the quick brown fox jumps over the lazy dog"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = {
+        (r["id_a"], r["id_b"]) for r in dedup.minhash_candidates(df).collect()
+    }
+    assert pairs == {(5, 6)}
+    assert dedup.minhash_band_table(df).filter("id < 5").count() == 0
 
 
 def test_cosine_known_vectors(spark):

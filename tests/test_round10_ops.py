@@ -179,7 +179,7 @@ def test_pr_auc_matches_brute_force_across_seeds(spark):
         ]
         want_bp, want_float = _ap_reference(pairs)
         df = spark.createDataFrame(pairs, "score double, label boolean")
-        r = pr_auc_exact(df, "score", "label", buckets=8).collect()[0]
+        r = pr_auc_exact(df, "score", "label").collect()[0]
         assert r["ap_bp"] == want_bp, f"seed {seed}"
         # The integer fold must sit within its documented floor bound of
         # the true float AP: under-counts by < m/(n_pos*1e4) bp + 1.
@@ -199,7 +199,6 @@ def test_pr_auc_perfect_and_empty_cohort(spark):
         spark.createDataFrame(rows, "score double, label boolean"),
         "score",
         "label",
-        buckets=4,
     ).collect()[0]
     assert r["ap_bp"] == 10000 and r["base_bp"] == 1000
     # No positives: NULL (undefined, loudly), base_bp 0.
@@ -212,14 +211,31 @@ def test_pr_auc_perfect_and_empty_cohort(spark):
 
 def test_pr_auc_bucketing_invariance(spark):
     # The bucketed two-level prefix machinery is an implementation
-    # detail: 1 bucket and 64 buckets must agree exactly.
-    from ddataframeoperation_spark.operators.relational import pr_auc_exact
+    # detail: at the production bucket count, with more than 2 × 512
+    # distinct scores (several per bucket, so both descending prefix
+    # levels carry counts) and a heavy tie block, the result equals the
+    # unbucketed reference fold.
+    import random
 
-    rows = [((i * 37) % 100 / 100.0, (i * 13) % 3 == 0) for i in range(500)]
-    df = spark.createDataFrame(rows, "score double, label boolean")
-    a = pr_auc_exact(df, "score", "label", buckets=1).collect()[0]
-    b = pr_auc_exact(df, "score", "label", buckets=64).collect()[0]
-    assert a == b
+    from ddataframeoperation_spark.operators.relational import (
+        _RANK_BUCKETS,
+        pr_auc_exact,
+    )
+
+    rng = random.Random(43)
+    pairs = []
+    for _ in range(5000):
+        s = 0.25 if rng.random() < 0.2 else round(rng.random(), 3)
+        pairs.append((s, rng.random() < 0.1 + 0.6 * s))
+    assert len({s for s, _ in pairs}) > _RANK_BUCKETS
+    want_bp, _ = _ap_reference(pairs)
+    df = spark.createDataFrame(pairs, "score double, label boolean")
+    r = pr_auc_exact(df, "score", "label").collect()[0]
+    assert r["ap_bp"] == want_bp
+    assert (r["n_pos"], r["n_neg"]) == (
+        sum(y for _, y in pairs),
+        sum(not y for _, y in pairs),
+    )
 
 
 # -------------------------------------------- late-data drop replay harness
@@ -632,6 +648,46 @@ def test_stratified_kfold_exact_balance_and_determinism(spark):
 # -------------------------------------------------- weighted_percentiles
 
 
+def test_weighted_percentiles_matches_reference_at_production_buckets(spark):
+    """More than 2 × 512 distinct values (several per bucket, so both
+    prefix levels carry weight) plus one heavy value holding a third of
+    the weight, so several requested percentiles land on the tie."""
+    import random
+
+    from ddataframeoperation_spark.operators.relational import (
+        _RANK_BUCKETS,
+        weighted_percentiles,
+    )
+
+    rng = random.Random(47)
+    rows = [(rng.randint(1, 4000), rng.randint(1, 9)) for _ in range(4000)]
+    rows += [(1500, 10_000)]
+    assert len({v for v, _ in rows}) > 2 * _RANK_BUCKETS
+    probs = [1, 2500, 4000, 5000, 6000, 9000, 9999, 10000]
+    df = spark.createDataFrame(rows, "v long, w long")
+    got = {
+        r["p_bp"]: (r["value"], r["cum_weight"], r["total_weight"])
+        for r in weighted_percentiles(df, "v", "w", probs).collect()
+    }
+    assert got == {p: _weighted_reference(rows, p) for p in probs}
+
+
+
+def _weighted_reference(rows, p_bp):
+    """(value, cum_weight, total_weight) of the left-continuous weighted
+    inverse CDF at ``p_bp``, by one sorted pass in Python ints."""
+    agg = {}
+    for v, w in rows:
+        agg[v] = agg.get(v, 0) + w
+    total = sum(agg.values())
+    cw = 0
+    for v in sorted(agg):
+        cw += agg[v]
+        if cw * 10000 >= total * p_bp:
+            return v, cw, total
+    raise AssertionError
+
+
 def test_weighted_percentiles_matches_brute_force(spark):
     import random
 
@@ -643,32 +699,17 @@ def test_weighted_percentiles_matches_brute_force(spark):
     rows = [(rng.randint(1, 50), rng.randint(1, 9)) for _ in range(300)]
     df = spark.createDataFrame(rows, "v long, w long")
 
-    def brute(p_bp):
-        agg = {}
-        for v, w in rows:
-            agg[v] = agg.get(v, 0) + w
-        total = sum(agg.values())
-        cw = 0
-        for v in sorted(agg):
-            cw += agg[v]
-            if cw * 10000 >= total * p_bp:
-                return v, cw, total
-        raise AssertionError
-
     got = {
         r["p_bp"]: r
         for r in weighted_percentiles(
-            df, "v", "w", [2500, 5000, 9000, 10000], buckets=8
+            df, "v", "w", [2500, 5000, 9000, 10000]
         ).collect()
     }
     for p in (2500, 5000, 9000, 10000):
-        v, cw, total = brute(p)
+        v, cw, total = _weighted_reference(rows, p)
         r = got[p]
         assert (r["value"], r["cum_weight"], r["total_weight"]) == (v, cw, total), p
-    # Bucketing invariance: 1 bucket == 8 buckets.
-    a = sorted(map(tuple, weighted_percentiles(df, "v", "w", [5000], buckets=1).collect()))
-    b = sorted(map(tuple, weighted_percentiles(df, "v", "w", [5000], buckets=8).collect()))
-    assert a == b
+    b = sorted(map(tuple, weighted_percentiles(df, "v", "w", [5000]).collect()))
     # Zero/NULL-weight rows cannot move a quantile.
     df2 = df.unionByName(
         spark.createDataFrame([(1, 0), (50, None)], "v long, w long")

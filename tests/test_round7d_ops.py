@@ -878,23 +878,52 @@ def test_rank_sum_matches_manual_with_ties(spark):
     df = spark.createDataFrame(
         [("A", x) for x in a] + [("B", x) for x in b], "g string, v double"
     )
-    r = rank_sum_test(df, "g", "v", "A", buckets=4).collect()[0]
+    r = rank_sum_test(df, "g", "v", "A").collect()[0]
     # Hand-computed tie-averaged ranks: R_A = 20.5, U_A = 5.5.
     assert (r["n_a"], r["n_b"], r["rank_sum_a"], r["u_a"]) == (5, 4, 20.5, 5.5)
     assert r["z"] is not None and -2 < r["z"] < 0
 
 
 def test_rank_sum_bucketing_invariant(spark):
-    from ddataframeoperation_spark.operators.relational import rank_sum_test
+    """Ranks equal a brute-force reference at the production bucket
+    count: more than 2 × 512 distinct values, so every bucket holds
+    several and both prefix levels (cross-bucket offset, within-bucket
+    prefix) carry counts, plus a heavy tie block."""
+    import math
+    import random
+    from collections import Counter
 
-    rows = [("A", float(i % 17)) for i in range(300)] + [
-        ("B", float((i % 23) + 2)) for i in range(200)
+    from ddataframeoperation_spark.operators.relational import (
+        _RANK_BUCKETS,
+        rank_sum_test,
+    )
+
+    rng = random.Random(23)
+    rows = [
+        (rng.choice("AB"), 100.0 if rng.random() < 0.2 else rng.randrange(3000) / 4)
+        for _ in range(5000)
     ]
+    counts = Counter(v for _, v in rows)
+    assert len(counts) > 2 * _RANK_BUCKETS and max(counts.values()) > 500
+    rank, pos = {}, 1
+    for v in sorted(counts):
+        rank[v] = pos + (counts[v] - 1) / 2.0
+        pos += counts[v]
+    na = sum(1 for g, _ in rows if g == "A")
+    nb = len(rows) - na
+    ra = sum(rank[v] for g, v in rows if g == "A")
+    ua = ra - na * (na + 1) / 2.0
+    n = len(rows)
+    ties = sum(c**3 - c for c in counts.values())
+    z = (ua - na * nb / 2.0) / math.sqrt(
+        na * nb / 12.0 * ((n + 1) - ties / (n * (n - 1)))
+    )
+
     df = spark.createDataFrame(rows, "g string, v double")
-    # Correctness must not depend on the bucket count (it only balances).
-    r1 = rank_sum_test(df, "g", "v", "A", buckets=1).collect()[0]
-    r64 = rank_sum_test(df, "g", "v", "A", buckets=64).collect()[0]
-    assert tuple(r1) == tuple(r64)
+    r = rank_sum_test(df, "g", "v", "A").collect()[0]
+    assert (r["n_a"], r["n_b"]) == (na, nb)
+    assert (r["rank_sum_a"], r["u_a"]) == (round(ra, 4), round(ua, 4))
+    assert abs(r["z"] - z) <= 1e-4
 
 
 def test_rank_sum_degenerate_all_ties(spark):
@@ -908,14 +937,6 @@ def test_rank_sum_degenerate_all_ties(spark):
     assert r["z"] is None and r["rank_sum_a"] == 4.0
 
 
-def test_rank_sum_rejects_bad_buckets(spark):
-    from ddataframeoperation_spark.operators.relational import rank_sum_test
-
-    df = spark.createDataFrame([("A", 1.0)], "g string, v double")
-    with pytest.raises(ValueError):
-        rank_sum_test(df, "g", "v", "A", buckets=0)
-
-
 # --------------------------------------------------------------------- ks_test
 
 
@@ -927,11 +948,12 @@ def test_ks_test_known_distance_and_invariance(spark):
     df = spark.createDataFrame(
         [("A", x) for x in a] + [("B", x) for x in b], "g string, v double"
     )
-    r = ks_test(df, "g", "v", "A", buckets=4).collect()[0]
+    r = ks_test(df, "g", "v", "A").collect()[0]
     # ECDFs diverge most at v=2: A 0.4, B 0.0.
     assert (r["n_a"], r["n_b"], r["ks_d"]) == (5, 5, 0.4)
-    r1 = ks_test(df, "g", "v", "A", buckets=1).collect()[0]
-    assert tuple(r1) == tuple(r)
+    # Input partitioning cannot move the statistic.
+    r3 = ks_test(df.repartition(3), "g", "v", "A").collect()[0]
+    assert tuple(r3) == tuple(r)
 
 
 def test_ks_test_identical_distributions_zero(spark):

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ddataframeoperation_spark.operators.dedup import containment_pairs
 from ddataframeoperation_spark.operators.relational import (
+    _RANK_BUCKETS,
     chi_square_test,
     ks_test,
     rank_sum_test,
@@ -33,7 +34,7 @@ def test_rank_sum_matches_bruteforce_random(spark):
         for _ in range(400)
     ]
     df = spark.createDataFrame(rows, "g string, v double")
-    r = rank_sum_test(df, "g", "v", "A", buckets=16).collect()[0]
+    r = rank_sum_test(df, "g", "v", "A").collect()[0]
 
     all_v = sorted(v for _, v in rows)
     # Average rank per distinct value.
@@ -55,7 +56,7 @@ def test_ks_matches_bruteforce_random(spark):
         ("B", float(rng.randint(5, 40))) for _ in range(180)
     ]
     df = spark.createDataFrame(rows, "g string, v double")
-    r = ks_test(df, "g", "v", "A", buckets=8).collect()[0]
+    r = ks_test(df, "g", "v", "A").collect()[0]
 
     a = sorted(v for g, v in rows if g == "A")
     b = sorted(v for g, v in rows if g == "B")
@@ -63,6 +64,31 @@ def test_ks_matches_bruteforce_random(spark):
     ecdf = lambda xs, t: sum(1 for x in xs if x <= t) / len(xs)  # noqa: E731
     d = max(abs(ecdf(a, t) - ecdf(b, t)) for t in pts)
     assert r["ks_d"] == round(d, 4)
+
+
+def test_ks_matches_reference_at_production_buckets(spark):
+    """More than 2 × 512 distinct values (several per bucket, so both
+    prefix levels carry counts) plus a heavy tie block shared by both
+    cohorts; the ECDFs come from one sorted pass."""
+    rng = random.Random(29)
+    rows = [("A", 7.0) for _ in range(700)] + [("B", 7.0) for _ in range(300)]
+    rows += [("A", rng.randrange(2500) / 2) for _ in range(2500)]
+    rows += [("B", rng.randrange(500, 3500) / 2) for _ in range(2000)]
+    counts = Counter(v for _, v in rows)
+    assert len(counts) > 2 * _RANK_BUCKETS
+    ca = Counter(v for g, v in rows if g == "A")
+    cb = Counter(v for g, v in rows if g == "B")
+    n1, n2 = sum(ca.values()), sum(cb.values())
+    cum_a = cum_b = 0
+    d = 0.0
+    for v in sorted(counts):
+        cum_a += ca[v]
+        cum_b += cb[v]
+        d = max(d, abs(cum_a / n1 - cum_b / n2))
+
+    df = spark.createDataFrame(rows, "g string, v double")
+    r = ks_test(df, "g", "v", "A").collect()[0]
+    assert (r["n_a"], r["n_b"], r["ks_d"]) == (n1, n2, round(d, 4))
 
 
 def test_chi_square_matches_bruteforce_random(spark):

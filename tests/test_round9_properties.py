@@ -174,7 +174,7 @@ def test_auc_exact_matches_pairwise_bruteforce(spark, seed):
         (round(rng.random(), 2), rng.random() < 0.3) for _ in range(120)
     ]
     df = spark.createDataFrame(rows, "score double, label boolean")
-    r = auc_exact(df, "score", "label", buckets=rng.choice([1, 8, 512])).collect()[0]
+    r = auc_exact(df, "score", "label").collect()[0]
     pos = [s for s, y in rows if y]
     neg = [s for s, y in rows if not y]
     # Doubled pair count: 2 per win, 1 per tie -> exact integer.
@@ -182,3 +182,32 @@ def test_auc_exact_matches_pairwise_bruteforce(spark, seed):
     assert r["u2_pos"] == u2
     assert r["auc_bp"] == (u2 * 10000) // (2 * len(pos) * len(neg))
     assert (r["n_pos"], r["n_neg"]) == (len(pos), len(neg))
+
+
+def test_auc_exact_matches_reference_at_production_buckets(spark):
+    """More than 2 × 512 distinct scores (several per bucket, so both
+    prefix levels carry counts) plus a heavy tie block holding both
+    labels; U is counted per positive by bisecting the sorted negatives."""
+    import bisect
+
+    from ddataframeoperation_spark.operators.relational import (
+        _RANK_BUCKETS,
+        auc_exact,
+    )
+
+    rng = random.Random(41)
+    rows = []
+    for _ in range(5000):
+        s = 0.5 if rng.random() < 0.2 else round(rng.random(), 3)
+        rows.append((s, rng.random() < 0.2 + 0.5 * s))
+    assert len({s for s, _ in rows}) > _RANK_BUCKETS
+    neg = sorted(s for s, y in rows if not y)
+    pos = [s for s, y in rows if y]
+    u2 = sum(
+        bisect.bisect_left(neg, p) + bisect.bisect_right(neg, p) for p in pos
+    )
+
+    df = spark.createDataFrame(rows, "score double, label boolean")
+    r = auc_exact(df, "score", "label").collect()[0]
+    assert (r["n_pos"], r["n_neg"], r["u2_pos"]) == (len(pos), len(neg), u2)
+    assert r["auc_bp"] == (u2 * 10000) // (2 * len(pos) * len(neg))

@@ -32,16 +32,6 @@ def test_token_count(spark):
     assert n == 4  # hello world one two
 
 
-def test_decode_stub_schema_and_determinism(spark):
-    rows = [(1, bytearray(b"abcd")), (2, bytearray(b"")), (3, None)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = multimodal.decode_image_batch(df)
-    assert out.columns == ["media_id", "width", "height", "n_pixels"]
-    got = {r["media_id"]: (r["width"], r["height"]) for r in out.collect()}
-    assert got[1] == (5, 5)  # len 4 -> 4%640+1
-    assert got[2] == (1, 1) and got[3] == (1, 1)
-
-
 def test_media_metadata_prunes_payload(spark):
     rows = [(1, bytearray(b"abc")), (2, bytearray(b"abc"))]
     df = spark.createDataFrame(rows, "media_id long, payload binary")

@@ -3,6 +3,9 @@ on Spark and its oracle_sql() twin on DuckDB at sf0.01; compare row count,
 column names, and an order-insensitive value multiset.
 
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
+
+Query names are positional and space-separated; an unknown name exits 2
+before Spark starts.
 """
 
 from __future__ import annotations
@@ -146,6 +149,12 @@ def main() -> int:
         args = [a for a in args if a != "--vanilla"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    unknown = sorted(only - QUERIES.keys())
+    if unknown:
+        # A misspelled name would otherwise match nothing and the sweep
+        # would print a vacuous ALL GREEN.
+        print(f"ERROR unknown query name(s): {' '.join(unknown)}")
+        return 2
     if vanilla:
         from pyspark.sql import SparkSession
 

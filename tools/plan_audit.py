@@ -88,15 +88,13 @@ GLOBAL_WINDOW_ALLOWLIST = {
     "b33_hybrid_rrf",           # two top-10 candidate lists
     "b12_heavy_hitters",        # sketch output (<= tracked-capacity rows)
     "b22_temperature_mix",      # |distinct sources|-row quota table
-    "b11_rank_sum_test",        # <=buckets-row cross-bucket offset table
-    "b11_ks_test",              # <=buckets-row cross-bucket offset table
-    "b28_auc_exact",            # <=buckets-row cross-bucket offset table
-                                # (same rank machinery as rank_sum/ks)
-    "b28_pr_auc",               # <=buckets-row cross-bucket offset table
-                                # (descending twin of the auc machinery)
-    "b11_weighted_percentiles", # <=buckets-row cross-bucket offset table
-                                # (weighted twin of the same machinery;
-                                # one offset window per requested prob)
+    # The rank-statistics family: each has one <=512-row cross-bucket
+    # offset table (relational._cumulative_by_value).
+    "b11_rank_sum_test",
+    "b11_ks_test",
+    "b28_auc_exact",
+    "b28_pr_auc",
+    "b11_weighted_percentiles",
 }
 
 #: BroadcastNestedLoopJoin shapes beyond the 1-row Cross/BuildRight
