@@ -108,7 +108,7 @@ def events_as_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Same normalization as the batch catalog: ns-long → µs timestamp, and
     # TIMESTAMP_NTZ → TIMESTAMP (watermarks reject NTZ event-time columns).
-    return _normalize_timestamps(stream)
+    return _normalize_timestamps(stream, schema)
 
 
 def stage_multi_batch_replay(
