@@ -250,12 +250,6 @@ def _relation(spark: SparkSession, path: str, jschema) -> DataFrame:
     return DataFrame(jreader.load(path), spark)
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema from
-    :func:`_parquet_schema`, so the read starts no inference job."""
-    return _relation(spark, path, _footer_schema(spark, path))
-
-
 def _read_fixture(spark: SparkSession, path: str) -> DataFrame:
     jschema = _footer_schema(spark, path)
     schema = _parse_datatype_json_string(jschema.json())

@@ -37,9 +37,11 @@ from xml.sax.saxutils import escape
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ddataframeoperation_spark.catalog import Catalog
 from ddataframeoperation_spark.functions.schema import (
+    _type_from_name,
     manifest_for,
     metadata_from_schema,
     schema_from_metadata,
@@ -96,10 +98,6 @@ def _backtick_escape(s: str) -> str:
     return s.replace('"', "`")
 
 
-def _backtick_unescape(s: str) -> str:
-    return s.replace("`", '"')
-
-
 def perform_load_data(
     spark: SparkSession,
     table_specs: Sequence[Mapping] | None = None,
@@ -129,11 +127,16 @@ def perform_load_data(
         name = spec["TABLE_NAME"]
         schema = None
         if "ColumnList" in spec:
-            names = ", ".join(c["MappedAliasName"] for c in spec["ColumnList"])
-            types = ", ".join(
-                c.get("DataType", "string") for c in spec["ColumnList"]
+            schema = T.StructType(
+                [
+                    T.StructField(
+                        c["MappedAliasName"].strip(),
+                        _type_from_name(c.get("DataType", "string")),
+                        True,
+                    )
+                    for c in spec["ColumnList"]
+                ]
             )
-            schema = schema_from_metadata(names, types)
         elif "MetaData" in spec:
             schema = schema_from_metadata(
                 spec["MetaData"], spec.get("MetaDataType", "")
@@ -212,9 +215,9 @@ def final_output(
     (``:218-221``). A failed node deletes its whole ``{root}/{uuid}/``
     before reporting 3, so no partial output is left looking complete.
     """
-    run_id = str(_uuid.uuid4())
-    data_loc = os.path.join(output_root, run_id, "model")
-    pmml_loc = os.path.join(output_root, run_id, "pmml") if write_pmml else ""
+    run_uuid = str(_uuid.uuid4())
+    data_loc = os.path.join(output_root, run_uuid, "model")
+    pmml_loc = os.path.join(output_root, run_uuid, "pmml") if write_pmml else ""
     try:
         writer = df.write.mode("overwrite")
         if fmt == "csv":
@@ -234,7 +237,7 @@ def final_output(
         # A failing delete must not mask the node's own error.
         spark = df.sparkSession
         with contextlib.suppress(Py4JError):
-            run_dir = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(output_root, run_id))
+            run_dir = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(output_root, run_uuid))
             run_dir.getFileSystem(spark._jsc.hadoopConfiguration()).delete(run_dir, True)
         if job_reporter is not None:
             job_reporter("", 3)
@@ -275,10 +278,10 @@ def generate_pmml(metadata: str, metadata_type: str, script: str) -> str:
     Reference bugs fixed: all FieldRefs are emitted (the reference's
     ``CreateApplyFunc`` returned inside its loop, ``:565-572``) and the
     DataDictionary built at ``:449-453`` is actually included in the
-    document (the reference never appended it)."""
+    document (the reference never appended it). Every field is written
+    ``dataType="float"``, as the reference wrote it, so ``metadata_type``
+    is not read."""
     names = [n.strip() for n in metadata.split(",") if n.strip()]
-    types = [t.strip() for t in metadata_type.split(",") if t.strip()]
-    types += ["string"] * (len(names) - len(types))
     fields = "\n".join(
         f'      <DataField name="{escape(n)}" optype="continuous" dataType="float"/>'
         for n in names

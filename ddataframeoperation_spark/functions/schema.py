@@ -9,11 +9,14 @@ the DataFrame that is passed in.
 
 Types ride in a small vocabulary; the reference used R ``typeof`` names
 (logical/integer/double/character). We map both those and Spark DDL names
-into a canonical set so round-tripping is stable.
+into a canonical set so round-tripping is stable. Any other name — the
+``decimal(12,2)``, ``struct<...>`` or ``map<...>`` that
+:func:`metadata_from_schema` emits — is parsed as a Spark DDL type.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException, PySparkRuntimeError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,24 +49,60 @@ _NAME_TO_TYPE: dict[str, T.DataType] = {
 }
 
 
+def _type_from_name(name: str) -> T.DataType:
+    """One ``MetaDataType`` entry as a Spark type. Vocabulary names map
+    without a JVM call; any other name is parsed by
+    ``DataType.fromDDL``, which needs an active session. A name that does
+    not parse, or that finds no session, falls back to string."""
+    name = name.strip()
+    dt = _NAME_TO_TYPE.get(name.lower())
+    if dt is not None:
+        return dt
+    if name:
+        try:
+            return T.DataType.fromDDL(name)
+        except (AnalysisException, PySparkRuntimeError):
+            pass
+    return T.StringType()
+
+
+def _split_top_level(s: str) -> list[str]:
+    """Split ``s`` on the commas outside ``()`` and ``<>`` — so
+    ``decimal(12,2)`` and ``map<string,int>`` stay whole — dropping
+    blank parts."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "(<":
+            depth += 1
+        elif ch in ")>":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(s[start:i])
+            start = i + 1
+    parts.append(s[start:])
+    return [p.strip() for p in parts if p.strip()]
+
+
 def schema_from_metadata(metadata: str, metadata_type: str) -> T.StructType:
     """Build a StructType from (MetaData, MetaDataType) comma-strings.
 
     ``schema_from_metadata("a, b", "integer, character")`` →
-    ``StructType([a int, b string])``. Unknown type names fall back to
+    ``StructType([a int, b string])``. Type names are split on top-level
+    commas only, so ``"decimal(12,2), bigint"`` is two types, and each is
+    resolved by :func:`_type_from_name`. Unknown type names fall back to
     string, matching the reference's behavior of never enforcing types on
     read (``read.csv`` inference, ``:43``) — but unlike the reference we
     *apply* the schema at scan so Catalyst can push down and prune.
     """
     names = [n.strip() for n in metadata.split(",") if n.strip()]
-    type_names = [t.strip().lower() for t in metadata_type.split(",") if t.strip()]
-    if len(type_names) < len(names):
-        type_names += ["string"] * (len(names) - len(type_names))
-    fields = [
-        T.StructField(name, _NAME_TO_TYPE.get(tn, T.StringType()), True)
-        for name, tn in zip(names, type_names)
-    ]
-    return T.StructType(fields)
+    type_names = _split_top_level(metadata_type)
+    type_names += ["string"] * (len(names) - len(type_names))
+    return T.StructType(
+        [
+            T.StructField(name, _type_from_name(tn), True)
+            for name, tn in zip(names, type_names)
+        ]
+    )
 
 
 def _canonical_type_name(dt: T.DataType) -> str:

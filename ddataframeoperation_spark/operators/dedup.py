@@ -13,18 +13,21 @@ Scale notes (100 TB):
   cross join. Exact pairwise Jaccard is provided for verification at test
   scale and as the refinement step applied to LSH candidates;
 - all hashing is Spark's builtin xxhash64/murmur3 (JVM, codegen'd) — no
-  Python in the hot path.
+  Python in the hot path;
+- the iterative graph operators (connected components, PageRank, HITS)
+  and the materialized SimHash chunk index cut their lineage through one
+  policy, :func:`_truncate`: a reliable checkpoint when the deployment
+  sets ``spark.checkpoint.dir``, else an executor-local
+  ``localCheckpoint``.
 """
 
 from __future__ import annotations
 
-import re as _re
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ddataframeoperation_spark.catalog import _read_parquet
 from ddataframeoperation_spark.operators.windows import latest_per_key
 
 __all__ = [
@@ -33,7 +36,6 @@ __all__ = [
     "normalized_text",
     "fingerprint",
     "dedup_by_fingerprint",
-    "shingles",
     "ngram_shingles",
     "minhash_band_table",
     "minhash_candidates",
@@ -42,7 +44,6 @@ __all__ = [
     "cluster_dedup",
     "cluster_dedup_best",
     "jaccard_pairs",
-    "simhash",
     "simhash_table",
     "simhash_candidates",
     "hamming_candidates",
@@ -60,7 +61,6 @@ __all__ = [
     "pair_degree_census",
     "adamic_adar_pairs",
     "hits",
-    "sweep_checkpoint_rounds",
 ]
 
 
@@ -138,17 +138,6 @@ def ngram_shingles(toks: Column, n: int) -> Column:
     return F.transform(
         idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
     )
-
-
-def shingles(col: str | Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string>: tokenize the normalized
-    text, slide an n-window. Pure builtin higher-order functions — JVM-side.
-
-    NOTE: convenience form for small inputs/tests. Hot paths should
-    materialize the token array and use :func:`ngram_shingles` — the
-    inlined split here re-evaluates per element (see ngram_shingles).
-    """
-    return ngram_shingles(F.split(normalized_text(col), " "), n)
 
 
 def minhash_band_table(
@@ -281,48 +270,17 @@ def minhash_candidates(
     return pairs
 
 
-#: Run ids embedded in round-file names — exactly 12 lowercase hex chars,
-#: the uuid4 prefix the operators generate. Caller-supplied run_ids are
-#: VALIDATED against this: an arbitrary string would produce round dirs
-#: that _ROUND_DIR_RE (the sweep) can never match, silently re-creating
-#: the unbounded-checkpoint growth the sweep exists to prevent.
-_RUN_ID_RE = _re.compile(r"^[0-9a-f]{12}$")
-
-
-def _resolve_run_id(run_id: "str | None") -> str:
-    import uuid
-
-    if run_id is None:
-        return uuid.uuid4().hex[:12]
-    # fullmatch, not match: re's '$' also matches before a trailing
-    # newline, so 'abcdef012345\n' would pass and mint round dirs the
-    # sweep regex can never match — the exact growth this guards.
-    if not _RUN_ID_RE.fullmatch(run_id):
-        raise ValueError(
-            f"run_id must be 12 lowercase hex chars (got {run_id!r}) — "
-            "sweep_checkpoint_rounds only matches that form"
-        )
-    return run_id
-
-
-def _round_truncator(prefix: str, run: str, checkpoint_dir: "str | None"):
-    """The per-round lineage-truncation closure shared by the iterative
-    operators: parquet rounds named ``<prefix>_<run>_round_N`` under
-    ``checkpoint_dir`` (cluster mode — names MUST stay in sync with
-    ``_ROUND_DIR_RE`` so :func:`sweep_checkpoint_rounds` can clean them;
-    keeping every writer here is what pins that), else eager
-    ``localCheckpoint`` (single-node/test mode). A parquet round is read
-    back with its footer schema, so only the write starts a Spark job."""
-    seq = iter(range(10**6))
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/{prefix}_{run}_round_{next(seq)}"
-            df.write.mode("overwrite").parquet(path)
-            return _read_parquet(df.sparkSession, path)
-        return df.localCheckpoint(eager=True)
-
-    return _truncate
+def _truncate(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage by materializing it now — the one truncation
+    policy of the iterative operators and materialized indexes here.
+    When the SparkContext has a checkpoint directory (set once per
+    deployment through ``spark.checkpoint.dir``) the result is a reliable
+    ``checkpoint``, which survives a lost executor and which Spark deletes
+    once unreferenced when ``spark.cleaner.referenceTracking.cleanCheckpoints``
+    is on; otherwise an executor-local ``localCheckpoint``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _np_min_label_components(a, b):
@@ -357,9 +315,7 @@ def _np_min_label_components(a, b):
 def connected_components(
     pairs: DataFrame,
     max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
     on_nonconverged: str = "raise",
-    run_id: str | None = None,
     block_col: str | None = None,
     small_graph_rows: int = 4_000_000,
 ) -> DataFrame:
@@ -388,22 +344,8 @@ def connected_components(
     partial labels (each id still maps to SOME member of its component,
     just not necessarily the global min).
 
-    ``checkpoint_dir``: when given, each round materializes as parquet
-    under that directory — the cluster-production mode, where a lost
-    executor rereads the round file instead of replaying every round
-    (``localCheckpoint`` blocks are lost with their executor). Parquet
-    rather than ``sc.setCheckpointDir`` + ``.checkpoint()`` because the
-    latter mutates SESSION-GLOBAL state as a side effect, racing any
-    concurrent operator with its own checkpoint location. Round files
-    (``cc_<run>_round_N``) are NOT deleted by the operator — the
-    returned plan reads the final round, so the CALLER owns cleanup of
-    the directory once the result is consumed
-    (:func:`sweep_checkpoint_rounds`, optionally scoped to ``run_id``).
-    Defaults to ``localCheckpoint`` for single-node/test runs.
-
-    ``run_id``: caller-supplied round-file prefix (default: a fresh
-    uuid), so a compositing operator can sweep EXACTLY its own rounds
-    afterwards without touching a concurrent run sharing the directory.
+    Each round is truncated by :func:`_truncate`: a reliable checkpoint
+    when the context has a checkpoint directory, else ``localCheckpoint``.
 
     Returns (id, component) with component = min id in the component.
 
@@ -416,13 +358,13 @@ def connected_components(
     vectorized min-label pointer-jumping pass over the in-memory edge
     arrays (numpy; O(E·log·rounds) element ops, no per-round Spark jobs,
     no checkpoints). Same (id, component=min id) output, bitwise. The
-    iteration knobs (``max_iterations``/``checkpoint_dir``/
-    ``on_nonconverged``/``run_id``) do not apply — the kernel always
-    converges exactly. The kernel holds one BLOCK's edge list in memory
-    (the blocked-kernel contract shared with the jaccard matmul); the
-    iterative hook/shortcut rounds remain the unblocked/100 TB default
-    where one component can span the corpus. Measured on the sf0.1
-    bench graph (445k pairs): ~5 s of eager round jobs → 0.3 s.
+    iteration knobs (``max_iterations``/``on_nonconverged``) do not
+    apply — the kernel always converges exactly. The kernel holds one
+    BLOCK's edge list in memory (the blocked-kernel contract shared with
+    the jaccard matmul); the iterative hook/shortcut rounds remain the
+    unblocked/100 TB default where one component can span the corpus.
+    Measured on the sf0.1 bench graph (445k pairs): ~5 s of eager round
+    jobs → 0.3 s.
 
     ``small_graph_rows`` (r14 optimization — the standard distributed-CC
     ENDGAME): after the map-side contraction + symmetrize/distinct
@@ -453,12 +395,6 @@ def connected_components(
         )
     if block_col is not None:
         return _cc_block_kernel(pairs, block_col)
-
-    # Unique per-call prefix: fixed paths + overwrite would clobber files
-    # that a previously RETURNED lazy result (or a concurrent call sharing
-    # the dir) still reads — the old sc.checkpoint() API generated unique
-    # per-RDD paths, and this keeps that property.
-    _truncate = _round_truncator("cc", _resolve_run_id(run_id), checkpoint_dir)
 
     # Materialize the edge list ONCE before iterating: every round joins
     # against ``edges``, and without this the full upstream pair
@@ -1080,48 +1016,17 @@ def levenshtein_pairs(
     )
 
 
-def simhash(col: str | Column = "text", bits: int = 64) -> Column:
-    """B32 — 64-bit SimHash over word tokens: for each bit position, sum
-    +1/-1 votes of token-hash bits, bit = sign. Expressed with
-    aggregate/transform builtins over xxhash64 token hashes (no UDF).
-
-    Returned as bigint; near-duplicates have small Hamming distance."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(normalized_text(c), " ")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def mask(i: int) -> Column:
-        # Two's-complement fold: bit 63 is the long sign bit (1<<63 would
-        # overflow a JVM long literal).
-        v = 1 << i
-        return F.lit(v - (1 << 64) if v >= (1 << 63) else v).cast("long")
-
-    # For each bit i: votes = sum over tokens of (2*bit_i - 1); bit = votes > 0.
-    def bit_of(i: int) -> Column:
-        votes = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(mask(i)) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        return F.when(votes > 0, mask(i)).otherwise(F.lit(0).cast("long"))
-
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        out = out.bitwiseOR(bit_of(i))
-    return out
-
-
 def simhash_table(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 64,
 ) -> DataFrame:
-    """(id, sh) SimHash table via explode + hash-aggregate — the scalable
-    form of :func:`simhash`: one shuffle on id, all codegen'd (the
-    closed-form per-row expression re-evaluates the token hash array per
-    bit and falls out of codegen on wide bit widths).
+    """B32 — 64-bit SimHash over word tokens as an (id, sh) table: for
+    each bit position, the majority vote of the token hashes' bits
+    (xxhash64 of each normalized token), via explode + hash-aggregate —
+    one shuffle on id, all codegen'd. Near-duplicates have small
+    Hamming distance between their ``sh`` bigints.
 
     Bit-vote counters are PACKED three per aggregate column (21-bit
     fields): per input row each field receives bit_i ∈ {0,1} shifted to
@@ -1193,19 +1098,16 @@ def simhash_candidates(
     max_hamming: int = 3,
     blocks: int = 4,
     max_bucket: int | None = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """B32 — SimHash near-dup candidates: :func:`simhash_table` over the
     text, then the generic :func:`hamming_candidates` block-permutation
-    join. See the latter for the bucket-cap/star-linkage and
-    checkpointing contract."""
+    join. See the latter for the bucket-cap/star-linkage contract."""
     sh = simhash_table(df, id_col=id_col, text_col=text_col)
     return hamming_candidates(
         sh,
         max_hamming=max_hamming,
         blocks=blocks,
         max_bucket=max_bucket,
-        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -1216,7 +1118,6 @@ def hamming_candidates(
     max_hamming: int = 3,
     blocks: int = 4,
     max_bucket: int | None = 64,
-    checkpoint_dir: str | None = None,
     bits: int = 64,
 ) -> DataFrame:
     """Generic Hamming-neighbor candidates over ANY (id, sh) fingerprint
@@ -1246,11 +1147,8 @@ def hamming_candidates(
     The capped path materializes the windowed chunk index once (three
     consumers; see body comment) and therefore launches a Spark job at
     call time — callers wanting full laziness pass ``max_bucket=None``.
-    ``checkpoint_dir`` writes the index as parquet under that directory
-    (the cluster-production mode: reliable, restartable, and reusable as
-    the incremental index — and unlike ``sc.setCheckpointDir`` it leaves
-    session-global state untouched), while the default ``localCheckpoint``
-    suits single-node runs (blocks are lost with their executor).
+    The index is materialized by :func:`_truncate`: a reliable checkpoint
+    when the context has a checkpoint directory, else ``localCheckpoint``.
     """
     bits_per = bits // blocks
     sh = sh_df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("sh"))
@@ -1289,30 +1187,12 @@ def hamming_candidates(
         # Materialize the windowed chunk table ONCE: three consumers read
         # it (join left/right + star branch), and without this each one
         # re-executes the 64-column simhash aggregation — measured 11.4 s
-        # vs 4.7 s uncapped on a 10× corpus. This is also the persistable
-        # artifact at scale: like the MinHash band table, (id, sh, blk,
-        # chunk) IS the incremental near-dup index.
-        chunks = (
+        # vs 4.7 s uncapped on a 10× corpus.
+        chunks = _truncate(
             chunks.withColumn("_n", F.count("*").over(w))
             .withColumn("_rep", F.min(F.struct("id", "sh")).over(w))
             .filter(F.col("_n") >= 2)
         )
-        if checkpoint_dir is not None:
-            # Materialize as parquet in the CALLER'S directory rather than
-            # sc.setCheckpointDir + .checkpoint(): that call mutates the
-            # session-wide checkpoint dir as a side effect, racing any
-            # other operator (connected_components) using its own. The
-            # parquet form is equally reliable, and (id, sh, blk, chunk)
-            # is exactly the persistable incremental near-dup index. The
-            # unique suffix keeps a second call (or a concurrent one) from
-            # clobbering an index a still-lazy earlier result reads.
-            import uuid
-
-            path = f"{checkpoint_dir}/simhash_chunk_index_{uuid.uuid4().hex[:12]}"
-            chunks.write.mode("overwrite").parquet(path)
-            chunks = _read_parquet(chunks.sparkSession, path)
-        else:
-            chunks = chunks.localCheckpoint(eager=True)
         small = chunks.filter(F.col("_n") <= max_bucket).drop("_n", "_rep")
         a = small.alias("a")
         b = small.alias("b")
@@ -2061,8 +1941,6 @@ def pagerank(
     n_iter: int = 8,
     damping_bp: int = 8500,
     unit: int = 10**9,
-    checkpoint_dir: str | None = None,
-    run_id: str | None = None,
     arrow_kernel: bool = False,
     kernel_max_rows: int = 5_000_000,
 ) -> DataFrame:
@@ -2092,16 +1970,8 @@ def pagerank(
 
     Plan/scale: per iteration one edges⋈ranks join (shuffle on src — or a
     broadcast when the rank table is small), one sum shuffle on dst, one
-    left join back to nodes; lineage is truncated per round exactly like
-    :func:`connected_components` (``checkpoint_dir`` parquet rounds for
-    cluster runs, ``localCheckpoint`` otherwise). A run writes
-    ``n_iter + 3`` round directories (``pr_<run>_round_N``) under
-    ``checkpoint_dir`` and the CALLER owns their cleanup after the
-    result is consumed — earlier rounds can't be deleted mid-run (the
-    returned plan still reads the last one), so repeated cluster runs
-    against one directory must sweep it between runs
-    (:func:`sweep_checkpoint_rounds`; pass ``run_id`` to scope the
-    sweep to this call's rounds when the directory is shared).
+    left join back to nodes; lineage is truncated per round by
+    :func:`_truncate`, exactly like :func:`connected_components`.
 
     Returns (id, rank_units long).
 
@@ -2116,8 +1986,7 @@ def pagerank(
     ``n_iter`` join+agg+checkpoint rounds with one task holding the
     edge list — the same "one bounded block in memory" contract as
     every blocked kernel here. The iterative path stays the default
-    for unbounded graphs; ``checkpoint_dir``/``run_id`` do not apply
-    to the kernel (no rounds to truncate). Measured: 8 rounds on the
+    for unbounded graphs. Measured: 8 rounds on the
     25-node nation graph 1.5 s → one 0.1 s job. ``kernel_max_rows``
     (r14, VERDICT r13 guard): the kernel REFUSES graphs above this
     node+edge row bound instead of OOMing the one task a wrong
@@ -2133,8 +2002,6 @@ def pagerank(
             nodes, edges, n_iter, damping_bp, unit,
             max_rows=kernel_max_rows,
         )
-    _truncate = _round_truncator("pr", _resolve_run_id(run_id), checkpoint_dir)
-
     # Materialize the node list once: it is re-joined EVERY round (the
     # dangling-node left join), and an expensive upstream lineage — e.g.
     # keyword_pagerank's corpus-wide skipgram explode — would otherwise
@@ -2199,69 +2066,11 @@ def pagerank(
     return ranks
 
 
-#: Materialized-round directory names the iterative operators write under a
-#: caller-supplied checkpoint_dir: connected_components (cc_*), pagerank
-#: (pr_*), hits (hits_*), keyword_pagerank's edge table (kwpr_edges_*).
-#: Matched EXACTLY so the sweep can never touch caller data co-located in
-#: the directory.
-_ROUND_DIR_RE = _re.compile(
-    r"^(?:(?:cc|pr|hits)_(?P<run1>[0-9a-f]{12})_round_\d+"
-    r"|kwpr_edges_(?P<run2>[0-9a-f]{12}))$"
-)
-
-
-def sweep_checkpoint_rounds(
-    spark,
-    checkpoint_dir: str,
-    run_id: str | None = None,
-) -> int:
-    """Delete the materialized round directories that
-    :func:`connected_components` / :func:`pagerank` /
-    ``text.keyword_pagerank`` wrote under ``checkpoint_dir`` — the
-    caller-owned cleanup half of the checkpoint contract (without it,
-    repeated cluster runs against one directory grow it unboundedly:
-    ``n_iter + 3`` parquet dirs per pagerank run).
-
-    Call AFTER the returned result is consumed (collected or written):
-    the lazy plan reads the final round file. ``run_id=None`` sweeps
-    every round directory (single-tenant directories); pass the
-    ``run_id`` given to the operator to sweep exactly that run when the
-    directory is shared with live runs. Only names matching the
-    operators' round patterns are touched — co-located caller files
-    survive. Uses the Hadoop FileSystem API via the session's JVM
-    gateway, so local paths and HDFS/object-store URIs both work.
-
-    Returns the number of round directories deleted.
-    """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return 0
-    removed = 0
-    for st in fs.listStatus(hpath):
-        if not st.isDirectory():
-            continue
-        m = _ROUND_DIR_RE.match(st.getPath().getName())
-        if not m:
-            continue
-        if run_id is not None and run_id not in (
-            m.group("run1"),
-            m.group("run2"),
-        ):
-            continue
-        fs.delete(st.getPath(), True)
-        removed += 1
-    return removed
-
-
 def hits(
     nodes: DataFrame,
     edges: DataFrame,
     n_iter: int = 6,
     unit: int = 10**9,
-    checkpoint_dir: str | None = None,
-    run_id: str | None = None,
 ) -> DataFrame:
     """Weighted HITS (hubs & authorities) in EXACT fixed-point integer
     arithmetic — the directed-graph complement of :func:`pagerank`: a
@@ -2290,18 +2099,13 @@ def hits(
     Plan/scale: per iteration two edges⋈scores joins (shuffles carry
     (id, score) only), two node-sized aggregates, and two 1-ROW global
     totals broadcast back for the normalization — no global sort, no
-    driver-side state beyond the scalar. Lineage truncated per round
-    (``hits_<run>_round_N`` parquet under ``checkpoint_dir``, else
-    ``localCheckpoint``); same caller-owns-cleanup contract and
-    :func:`sweep_checkpoint_rounds` support as pagerank.
+    driver-side state beyond the scalar. Lineage truncated per round by
+    :func:`_truncate`, as in pagerank.
 
     Returns (id, hub_units long, auth_units long).
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    _truncate = _round_truncator(
-        "hits", _resolve_run_id(run_id), checkpoint_dir
-    )
 
     # NULL-id nodes and NULL-field edges are dropped up front. Beyond
     # the garbage output row a NULL-id node would add, a NULL-dst edge

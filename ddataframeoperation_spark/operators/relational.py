@@ -271,7 +271,6 @@ def except_all(a: DataFrame, b: DataFrame, distinct: bool = True) -> DataFrame:
 def profile(
     df: DataFrame,
     cols: Sequence[str],
-    exact: bool = False,
     rsd: float = 0.01,
 ) -> DataFrame:
     """B28 adjunct — per-column data profile: nulls, distinct count, min,
@@ -279,24 +278,16 @@ def profile(
     all aggregates map-side-combined. The first thing a training-data
     pipeline runs on a new source.
 
-    ``exact=False`` (default) uses ``approx_count_distinct`` (HLL++,
-    relative std dev ``rsd``): N exact ``countDistinct`` in a single agg
-    triggers Catalyst's ``Expand`` — the input is replicated once per
-    distinct aggregate, a severalfold scan amplification that is
-    unacceptable at 100 TB for a diagnostic. ``exact=True`` restores exact
-    counts for small-scale verification."""
-    if exact:
-        def _distinct(c: str):
-            return F.countDistinct(c)
-    else:
-        def _distinct(c: str):
-            return F.approx_count_distinct(c, rsd)
-
+    Distinct counts are ``approx_count_distinct`` (HLL++, relative std
+    dev ``rsd``): N exact ``countDistinct`` in a single agg triggers
+    Catalyst's ``Expand`` — the input is replicated once per distinct
+    aggregate, a severalfold scan amplification that is unacceptable at
+    100 TB for a diagnostic."""
     aggs = []
     for c in cols:
         aggs += [
             F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}__nulls"),
-            _distinct(c).alias(f"{c}__distinct"),
+            F.approx_count_distinct(c, rsd).alias(f"{c}__distinct"),
             F.min(c).cast("string").alias(f"{c}__min"),
             F.max(c).cast("string").alias(f"{c}__max"),
             F.count("*").alias(f"{c}__rows"),

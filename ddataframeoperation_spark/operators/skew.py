@@ -11,11 +11,13 @@ this (single R process); these operators are pure engine surface.
   shuffle on (key, salt) first so no single reducer owns a hot key, then
   combine the per-salt partials. Works for any algebraic aggregate given
   its (partial, merge) pair; results are bit-identical to a plain groupBy.
-- :func:`salted_join` — replicate the small side per salt value so a hot
-  join key's rows spread over ``salt_buckets`` tasks.
-- :func:`write_bucketed` / :func:`bucketed_table` — persist a DataFrame
-  bucketed+sorted by the join key; two tables bucketed the same way
-  equi-join with zero Exchange (verified in tests by plan inspection).
+- :func:`zvalue` — the Morton (Z-order) curve value of several columns,
+  for sorting a table so each column's per-file min/max ranges narrow.
+- :func:`write_audit_publish` — stage, audit, then swap a table
+  directory into place.
+
+Bucketed and partitioned layouts need no wrapper here:
+``DataFrameWriter.bucketBy``/``sortBy`` and ``partitionBy`` are the API.
 """
 
 from __future__ import annotations
@@ -28,14 +30,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "with_salt",
     "salted_group_agg",
-    "salted_join",
-    "write_bucketed",
-    "bucketed_table",
-    "write_partitioned",
     "zvalue",
-    "write_zordered",
-    "merge_upsert",
-    "compact",
     "key_skew_audit",
     "join_strategy_advice",
     "join_fanout_estimate",
@@ -73,81 +68,6 @@ def salted_group_agg(
     return partial.groupBy(*keys).agg(*finals)
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the big side, replicate the small side
-    once per salt value, join on (key, salt). Use when one join key owns a
-    disproportionate share of the big side and AQE's skew splitting is not
-    enough (e.g. the hot key exceeds a single executor's memory). The small
-    side grows ×``salt_buckets`` — keep it genuinely small.
-
-    Only ``inner`` and ``left`` (outer) joins are supported: under a
-    right/full outer join every unmatched small-side key would surface
-    once per salt replica as spurious null-extended rows."""
-    if how not in ("inner", "left", "leftouter", "left_outer"):
-        raise ValueError(
-            f"salted_join supports how='inner'/'left', got {how!r}: "
-            "right/full outer would emit one null-extended row per salt "
-            "replica for unmatched small-side keys"
-        )
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)).cast("int")
-    )
-    small_r = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    joined = big_s.join(
-        small_r,
-        on=[big_s[big_key] == small_r[small_key], big_s["_salt"] == small_r["_salt"]],
-        how=how,
-    )
-    return joined.drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed table.
-    Joins/aggregations on ``bucket_cols`` between tables bucketed the same
-    way need no Exchange — the write pays the shuffle once. This is the
-    layout move for fact tables that are repeatedly joined on one key at
-    100 TB."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    fmt: str = "parquet",
-) -> None:
-    """Hive-style partitioned layout (``path/col=value/...``). Filters on
-    ``partition_cols`` become directory pruning — at 100 TB a date filter
-    on date-partitioned events skips whole directories without opening a
-    footer. Partition columns must be low-cardinality (date, region, type);
-    a high-cardinality partition column creates a small-files problem
-    instead. Pruning is asserted in tests via ``PartitionFilters`` in the
-    scan node."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).format(fmt).save(path)
-
-
 def zvalue(
     cols: Sequence[str],
     mins: Sequence[float],
@@ -179,78 +99,6 @@ def zvalue(
     return z
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 16,
-    n_files: int = 8,
-    fmt: str = "parquet",
-) -> None:
-    """Z-order clustered layout: sort the table along the Morton curve of
-    ``cols`` and range-partition into ``n_files`` files, so EVERY clustered
-    column gets narrow per-file min/max ranges simultaneously — parquet
-    footer stats then skip most files for a selective filter on ANY of the
-    clustered dimensions (single-column sort gives this for one dimension
-    only). This is the multi-dimensional data-skipping layout for fact
-    tables queried along several axes (e.g. events by user AND by value).
-
-    Cost at 100 TB: one bounded min/max agg scan (for the scaling
-    constants) + one range-shuffle write — same shape as any sorted
-    rewrite; file count should target ~1 GB files. Skipping effectiveness
-    is asserted in tests from the parquet footers themselves.
-    """
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"mx_{i}") for i, c in enumerate(cols)],
-    ).head()
-    mins = [stats[f"mn_{i}"] for i in range(len(cols))]
-    maxs = [stats[f"mx_{i}"] for i in range(len(cols))]
-    z = zvalue(cols, mins, maxs, bits=bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    fmt: str = "parquet",
-) -> None:
-    """MERGE-style upsert onto a plain parquet table: rows in ``updates``
-    replace target rows with the same key; new keys append.
-
-    Implementation: anti-join the target against the update keys (keep
-    unaffected rows), union the updates, rewrite. On plain parquet this
-    rewrites the table (the write is staged to a temp dir first, so a
-    mid-rewrite failure never destroys the target); a table format with
-    transaction support (Delta/Iceberg) turns the same logical MERGE into
-    a metadata operation — this operator is the format-independent
-    fallback and the semantic contract.
-
-    At 100 TB: partition the target (write_partitioned) and call this per
-    affected partition — the update key set prunes the rewrite.
-    """
-    from pyspark.sql import functions as SF
-
-    target = spark.read.format(fmt).load(target_path)
-    kept = target.join(
-        updates.select(*key_cols).distinct(), on=list(key_cols), how="left_anti"
-    )
-    merged = kept.unionByName(updates)
-    staging = target_path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    _swap_staging(spark, staging, target_path)
-
-
 def _swap_staging(spark: SparkSession, staging: str, target: str) -> None:
     """Swap a fully-written staging directory into place.
 
@@ -275,23 +123,6 @@ def _swap_staging(spark: SparkSession, staging: str, target: str) -> None:
             fs.rename(old, dst)
         raise IOError(f"could not move staging {staging} into {target}")
     fs.delete(old, True)
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    fmt: str = "parquet",
-) -> None:
-    """Small-files compaction: rewrite a table directory into
-    ``target_files`` files. Streaming sinks and per-batch upserts
-    accumulate small files; periodic compaction restores scan efficiency
-    (fewer tasks, better columnar compression). Same staged-rewrite safety
-    as :func:`merge_upsert`."""
-    df = spark.read.format(fmt).load(path).coalesce(target_files)
-    staging = path.rstrip("/") + "__staging"
-    df.write.mode("overwrite").format(fmt).save(staging)
-    _swap_staging(spark, staging, path)
 
 
 def key_skew_audit(

@@ -20,7 +20,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ddataframeoperation_spark.catalog import _read_parquet
 from ddataframeoperation_spark.operators.dedup import normalized_text
 
 __all__ = [
@@ -958,7 +957,6 @@ def corpus_datacard(
     text_col: str = "text",
     short_tokens: int = 20,
     n: int = 3,
-    approx: bool = False,
 ) -> DataFrame:
     """North-star — one-call per-(lang, source) training-corpus data card:
     doc/token volumes, token-length quantiles, short-doc share, and mean
@@ -971,12 +969,8 @@ def corpus_datacard(
     single groupBy then aggregates with map-side partials into
     |lang|x|source| output rows. No windows, no joins, no second scan —
     at 100 TB the card costs one shuffle of tiny partial-aggregate rows.
-    ``approx=False`` (the oracle-able default) uses exact ``percentile``,
-    whose partials carry the group's token counts; for corpora where one
-    (lang, source) group's counts outgrow an executor, pass
-    ``approx=True`` — ``percentile_approx`` keeps the identical plan
-    shape with bounded sketch-sized partials (the 100 TB setting;
-    quantiles then carry the sketch's rank-error bound).
+    The quantiles are exact ``percentile`` (oracle-able), whose partials
+    carry the group's token counts.
 
     Dirty-input contract: NULL ``text_col`` is coalesced to the empty
     string BEFORE tokenizing, so a NULL-text doc still counts in n_docs
@@ -1005,12 +999,11 @@ def corpus_datacard(
             ).otherwise(F.lit(0.0)),
         )
     )
-    pct = "percentile_approx" if approx else "percentile"
     return t.groupBy(*group_cols).agg(
         F.count("*").alias("n_docs"),
         F.sum("_ntok").alias("total_tokens"),
-        F.round(F.expr(f"{pct}(_ntok, 0.5)"), 4).alias("p50_tokens"),
-        F.round(F.expr(f"{pct}(_ntok, 0.9)"), 4).alias("p90_tokens"),
+        F.round(F.expr("percentile(_ntok, 0.5)"), 4).alias("p50_tokens"),
+        F.round(F.expr("percentile(_ntok, 0.9)"), 4).alias("p90_tokens"),
         F.round(F.avg(F.length(F.col("_text"))), 4).alias("avg_chars"),
         F.round(
             F.avg((F.col("_ntok") < short_tokens).cast("double")), 4
@@ -1893,7 +1886,6 @@ def keyword_pagerank(
     min_count: int = 3,
     n_iter: int = 6,
     k: int = 15,
-    checkpoint_dir: str | None = None,
     arrow_kernel: bool = False,
 ) -> DataFrame:
     """B34 — TextRank-style corpus keywords: PageRank over the token
@@ -1919,30 +1911,16 @@ def keyword_pagerank(
     per-round state — so the corpus-wide skipgram explode executes
     exactly once regardless of ``n_iter`` (it previously re-ran for
     the node list and per-round dangling joins: 8 corpus scans at
-    n_iter=6). ``checkpoint_dir`` selects the materialization:
-    parquet under that directory (cluster-safe; forwarded to
-    :func:`dedup.pagerank`) — and because the final top-``k`` is
-    BOUNDED, this operator materializes it driver-side and sweeps
-    its own round files before returning
-    (:func:`dedup.sweep_checkpoint_rounds` scoped to this run's id),
-    so repeated runs never accumulate checkpoint dirs;
-    else ``localCheckpoint`` — whose blocks live in executor storage
-    for the SESSION's lifetime (they are not unpersisted — the
-    returned plan reads them lazily) and are lost with an executor,
-    the single-node/test default.
+    n_iter=6). The edge relation and PageRank's rounds are materialized
+    by ``dedup._truncate``: a reliable checkpoint when the context has a
+    checkpoint directory, else ``localCheckpoint``.
     """
-    import uuid
+    from ddataframeoperation_spark.operators.dedup import _truncate, pagerank
 
-    from ddataframeoperation_spark.operators.dedup import (
-        pagerank,
-        sweep_checkpoint_rounds,
-    )
-
-    run = uuid.uuid4().hex[:12]
     pairs = skipgram_pairs(
         df, text_col, window=window, min_count=min_count
     )
-    edges = (
+    edges = _truncate(
         pairs.select(
             F.col("w1").alias("src"),
             F.col("w2").alias("dst"),
@@ -1958,12 +1936,6 @@ def keyword_pagerank(
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
-    if checkpoint_dir is not None:
-        path = f"{checkpoint_dir}/kwpr_edges_{run}"
-        edges.write.mode("overwrite").parquet(path)
-        edges = _read_parquet(df.sparkSession, path)
-    else:
-        edges = edges.localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
@@ -1972,29 +1944,12 @@ def keyword_pagerank(
     # arrow_kernel: the min_count-pruned vocabulary graph is bounded by
     # construction, so the caller may run all rounds in pagerank's
     # single exact-integer kernel (bit-identical; see dedup.pagerank).
-    ranks = pagerank(
-        nodes, edges, n_iter=n_iter, checkpoint_dir=checkpoint_dir,
-        run_id=run, arrow_kernel=arrow_kernel,
-    )
-    out = (
+    ranks = pagerank(nodes, edges, n_iter=n_iter, arrow_kernel=arrow_kernel)
+    return (
         ranks.orderBy(F.col("rank_units").desc(), F.col("id").asc())
         .limit(k)
         .select(F.col("id").alias("token"), "rank_units")
     )
-    if checkpoint_dir is not None:
-        # The final result is k rows — materialize it driver-side and
-        # sweep THIS run's round/edge files immediately (scoped by
-        # run_id, so a concurrent run sharing the directory is
-        # untouched). Unlike the raw pagerank/connected_components
-        # contract (caller owns cleanup because the returned plan is
-        # lazy over the last round file), the top-k here is bounded, so
-        # the operator can safely own its whole checkpoint lifecycle:
-        # repeated runs leave the directory empty (pinned in tests).
-        spark = df.sparkSession
-        rows = out.collect()
-        sweep_checkpoint_rounds(spark, checkpoint_dir, run_id=run)
-        return spark.createDataFrame(rows, out.schema)
-    return out
 
 
 def preference_pairs(

@@ -1470,7 +1470,7 @@ def b28p(spark: SparkSession, sf: str) -> DataFrame:
     # deterministic for fixed fixture data). Oracle emits TRUE per column.
     o = _t(spark, sf, "orders")
     cols = ["o_custkey", "o_orderstatus"]
-    prof = R.profile(o, cols)  # default approx path
+    prof = R.profile(o, cols)
     exact = None
     for c in cols:
         one = o.agg(F.countDistinct(c).alias("exact_distinct")).select(
@@ -7000,7 +7000,7 @@ def _zvalue_oracle_sql(bits: int = 8) -> str:
 @_q("bzo_zvalue_interleave", _zvalue_oracle_sql())
 def bzo(spark: SparkSession, sf: str) -> DataFrame:
     # External certification of the Z-order clustering key (skew.zvalue):
-    # the Morton bit-interleave that write_zordered sorts by. Pure integer
+    # the Morton bit-interleave a Z-ordered layout sorts by. Pure integer
     # shift/mask arithmetic after a broadcast-scalar quantization — the
     # oracle rebuilds the identical expression in SQL, so a hash match
     # proves the layout key bit-for-bit. Bounds [0,256)x[0,512) cover the

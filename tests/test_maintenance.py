@@ -1,47 +1,12 @@
-"""Table-maintenance operators: merge upsert, compaction, incremental dedup."""
+"""Incremental dedup and the reliable lineage-truncation path."""
 
 from __future__ import annotations
 
 import glob
 
-from pyspark.sql import functions as F
+import pytest
 
-from ddataframeoperation_spark.operators import dedup, skew
-
-
-def test_merge_upsert(spark, tmp_path):
-    target = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id long, tag string, v double"
-    ).write.parquet(target)
-    updates = spark.createDataFrame(
-        [(2, "b2", 99.0), (4, "d", 40.0)], "id long, tag string, v double"
-    )
-    skew.merge_upsert(spark, target, updates, ["id"])
-    got = {
-        (r["id"], r["tag"], r["v"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {(1, "a", 10.0), (2, "b2", 99.0), (3, "c", 30.0), (4, "d", 40.0)}
-
-
-def test_merge_upsert_idempotent(spark, tmp_path):
-    target = str(tmp_path / "t")
-    spark.createDataFrame([(1, 1.0)], "id long, v double").write.parquet(target)
-    updates = spark.createDataFrame([(1, 2.0)], "id long, v double")
-    skew.merge_upsert(spark, target, updates, ["id"])
-    skew.merge_upsert(spark, target, updates, ["id"])  # replay-safe
-    rows = spark.read.parquet(target).collect()
-    assert len(rows) == 1 and rows[0]["v"] == 2.0
-
-
-def test_compact_reduces_files(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    spark.range(1000).repartition(20).write.parquet(path)
-    assert len(glob.glob(f"{path}/part-*")) == 20
-    skew.compact(spark, path, target_files=2)
-    assert len(glob.glob(f"{path}/part-*")) == 2
-    assert spark.read.parquet(path).count() == 1000
+from ddataframeoperation_spark.operators import dedup
 
 
 def test_dedup_increment(spark):
@@ -61,47 +26,42 @@ def test_dedup_increment(spark):
     assert kept == [11, 13]
 
 
-def test_salted_join_rejects_right_outer(spark):
-    import pytest
-
-    a = spark.range(10).withColumnRenamed("id", "k")
-    b = spark.range(5).withColumnRenamed("id", "j")
-    with pytest.raises(ValueError, match="inner"):
-        skew.salted_join(a, b, "k", "j", how="right")
+def _checkpoint_rdds(ckpt):
+    return len(glob.glob(str(ckpt / "*" / "rdd-*")))
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+def test_connected_components_reliable_checkpoint(spark, reliable_checkpoints):
+    """With a checkpoint directory on the context, every lineage cut of the
+    iterative operators and the SimHash chunk index is a reliable
+    checkpoint written under it, and the rows equal the default
+    ``localCheckpoint`` path's."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(32)] + [(100, 101)], "id_a long, id_b long"
     )
-    labels = dedup.connected_components(
-        pairs, checkpoint_dir=str(tmp_path / "ckpt")
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1, 2), (1, 2, 1), (2, 0, 1), (3, 2, 4), (4, 5, 1), (5, 3, 1)],
+        "src long, dst long, w long",
     )
-    got = {(r["id"], r["component"]) for r in labels.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    # The reliable checkpoint actually landed on disk.
-    assert glob.glob(str(tmp_path / "ckpt" / "*"))
-
-
-def test_checkpoint_round_read_back_starts_no_job(spark, tmp_path):
-    """A parquet checkpoint round starts one Spark job, the write: the
-    read-back takes its schema from the footer instead of inferring it."""
-    import uuid
-
-    truncate = dedup._round_truncator(
-        "cc", "0123456789ab", str(tmp_path / "ckpt")
+    # Pairs (2k, 2k+1) differ in one bit; the 4 of each sh value share
+    # every chunk with each other.
+    sh = spark.createDataFrame(
+        [(i, (i // 4) * 0x0F0F0F0F0F0F + (i % 2)) for i in range(24)],
+        "id long, sh long",
     )
-    df = spark.range(10)
-    sc = spark.sparkContext
-    group = f"truncate-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "checkpoint round")
-    try:
-        back = truncate(df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert back.schema == spark.read.parquet(
-        str(tmp_path / "ckpt" / "cc_0123456789ab_round_0")
-    ).schema
-    assert sorted(r["id"] for r in back.collect()) == list(range(10))
+    ops = [
+        lambda: dedup.connected_components(chain, small_graph_rows=0),
+        lambda: dedup.pagerank(nodes, edges, n_iter=3),
+        lambda: dedup.hits(nodes, edges, n_iter=3),
+        lambda: dedup.hamming_candidates(sh, max_hamming=3),
+    ]
+    # The chain needs a second round, so the loop runs at least two.
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(chain, max_iterations=1, small_graph_rows=0)
+    local = [sorted(map(tuple, op().collect())) for op in ops]
+    assert all(local)
+    with reliable_checkpoints() as ckpt:
+        for op, want in zip(ops, local):
+            before = _checkpoint_rdds(ckpt)
+            assert sorted(map(tuple, op().collect())) == want
+            assert _checkpoint_rdds(ckpt) > before

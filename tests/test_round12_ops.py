@@ -11,8 +11,6 @@
 4. check_oracles temporal_kind surfaces date-vs-timestamp drift as a soft
    signal (ADVICE r11) and the single-execution temp-table path preserves
    the HUGEINT flag + fetchall/pandas parity semantics.
-5. sweep_checkpoint_rounds bounds pagerank/connected-components checkpoint
-   dirs across repeated runs (VERDICT r11 #6).
 """
 
 from __future__ import annotations
@@ -217,85 +215,6 @@ def test_bounded_state_partitions_lowers_and_restores(spark):
         spark.conf.set(key, old)
 
 
-# --------------------------------- checkpoint round sweeping
-
-
-def test_sweep_checkpoint_rounds_scoped_and_safe(spark, tmp_path):
-    from ddataframeoperation_spark.operators.dedup import (
-        connected_components,
-        pagerank,
-        sweep_checkpoint_rounds,
-    )
-
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    # caller data co-located in the directory must survive any sweep
-    (ckpt / "user_data.parquet").mkdir()
-    (ckpt / "notes.txt").write_text("keep me")
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a int, id_b int"
-    )
-    cc = connected_components(
-        edges, checkpoint_dir=str(ckpt), run_id="aaaaaaaaaaaa"
-    )
-    assert cc.count() > 0  # consume before sweeping
-
-    nodes = spark.createDataFrame([(1,), (2,), (3,)], "id int")
-    pr_edges = spark.createDataFrame(
-        [(1, 2, 1), (2, 3, 1)], "src int, dst int, w int"
-    )
-    pr = pagerank(
-        nodes, pr_edges, n_iter=2, checkpoint_dir=str(ckpt),
-        run_id="bbbbbbbbbbbb",
-    )
-    assert pr.count() == 3
-
-    names = {p.name for p in ckpt.iterdir()}
-    assert any(n.startswith("cc_aaaaaaaaaaaa_round_") for n in names)
-    assert any(n.startswith("pr_bbbbbbbbbbbb_round_") for n in names)
-
-    # scoped sweep: only the cc run goes
-    n_cc = sum(1 for n in names if n.startswith("cc_"))
-    assert sweep_checkpoint_rounds(spark, str(ckpt), "aaaaaaaaaaaa") == n_cc
-    names = {p.name for p in ckpt.iterdir()}
-    assert not any(n.startswith("cc_") for n in names)
-    assert any(n.startswith("pr_bbbbbbbbbbbb_round_") for n in names)
-
-    # unscoped sweep: every remaining round dir goes, caller files stay
-    assert sweep_checkpoint_rounds(spark, str(ckpt)) > 0
-    assert {p.name for p in ckpt.iterdir()} == {
-        "user_data.parquet", "notes.txt"
-    }
-    # idempotent / missing dir
-    assert sweep_checkpoint_rounds(spark, str(ckpt)) == 0
-    assert sweep_checkpoint_rounds(spark, str(tmp_path / "absent")) == 0
-
-
-def test_keyword_pagerank_repeated_runs_do_not_accumulate(spark, tmp_path):
-    from ddataframeoperation_spark.operators.text import keyword_pagerank
-
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma alpha beta"),
-            (2, "beta gamma delta beta gamma"),
-            (3, "gamma delta alpha gamma delta"),
-        ],
-        "doc_id int, text string",
-    )
-    ckpt = tmp_path / "kw"
-    first = None
-    for _ in range(3):
-        out = keyword_pagerank(
-            docs, min_count=2, n_iter=2, k=5, checkpoint_dir=str(ckpt)
-        )
-        got = {(r["token"], r["rank_units"]) for r in out.collect()}
-        first = got if first is None else first
-        assert got == first  # deterministic across runs
-        # the operator swept its own run: nothing accumulates
-        assert not any(ckpt.iterdir())
-
-
 def test_checker_ctas_preserves_hash_unsafe_types():
     # The single-execution rewrite materializes oracles through a CTAS;
     # the HUGEINT/DECIMAL flag must still see the original output types.
@@ -494,25 +413,6 @@ def test_hits_matches_pure_python_integer_replay(spark):
     assert got[2][0] == 0 and got[2][1] > 0
 
 
-def test_hits_checkpoint_rounds_sweepable(spark, tmp_path):
-    from ddataframeoperation_spark.operators.dedup import (
-        hits,
-        sweep_checkpoint_rounds,
-    )
-
-    nodes = spark.createDataFrame([(0,), (1,)], "id long")
-    edges = spark.createDataFrame([(0, 1, 1)], "src long, dst long, w long")
-    out = hits(
-        nodes, edges, n_iter=2, checkpoint_dir=str(tmp_path),
-        run_id="cccccccccccc",
-    )
-    assert out.count() == 2  # consume
-    names = {p.name for p in tmp_path.iterdir()}
-    assert any(n.startswith("hits_cccccccccccc_round_") for n in names)
-    assert sweep_checkpoint_rounds(spark, str(tmp_path), "cccccccccccc") > 0
-    assert not any(tmp_path.iterdir())
-
-
 def test_rfm_segments_contract(spark):
     import datetime
 
@@ -546,29 +446,6 @@ def test_rfm_segments_contract(spark):
 
 
 # --------------------------------- r12 self-review fixes
-
-
-def test_run_id_validated_against_sweep_pattern(spark):
-    import pytest
-
-    from ddataframeoperation_spark.operators.dedup import (
-        connected_components,
-        hits,
-        pagerank,
-    )
-
-    edges = spark.createDataFrame([(1, 2)], "id_a int, id_b int")
-    nodes = spark.createDataFrame([(1,), (2,)], "id long")
-    w_edges = spark.createDataFrame([(1, 2, 1)], "src long, dst long, w long")
-    # an arbitrary run_id would write round dirs the sweep regex can
-    # never match — silently unbounded checkpoint growth; must raise
-    for bad in ("nightly-1", "ABCDEF012345", "0123456789abc", ""):
-        with pytest.raises(ValueError, match="12 lowercase hex"):
-            connected_components(edges, run_id=bad)
-        with pytest.raises(ValueError, match="12 lowercase hex"):
-            pagerank(nodes, w_edges, run_id=bad)
-        with pytest.raises(ValueError, match="12 lowercase hex"):
-            hits(nodes, w_edges, run_id=bad)
 
 
 def test_semantic_join_unscorable_group_nan_on_both_paths(spark):

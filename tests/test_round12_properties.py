@@ -6,8 +6,6 @@
 - semantic_join's BLAS cogroup kernel must pick the same winners and
   4dp scores as the sequential-fold mode on random instances with
   duplicate vectors and NULL elements.
-- the checkpoint-sweep round-dir pattern must match exactly the names
-  the operators write and nothing else (it deletes recursively).
 """
 
 from __future__ import annotations
@@ -106,26 +104,3 @@ def test_semantic_join_arrow_fold_parity_random(spark, seed):
         assert_rounded(cos, exact[lid][1])
     # the NULL-element candidate never wins anywhere
     assert all(rid != 50 for rid, _ in fast.values())
-
-
-def test_sweep_pattern_matches_only_operator_round_dirs():
-    from ddataframeoperation_spark.operators.dedup import _ROUND_DIR_RE
-
-    run = "0123456789ab"
-    for ok in (
-        f"cc_{run}_round_0",
-        f"pr_{run}_round_999",
-        f"kwpr_edges_{run}",
-    ):
-        assert _ROUND_DIR_RE.match(ok), ok
-    for bad in (
-        "cc_short_round_0",            # run id not 12 hex chars
-        f"cc_{run}_round_",            # no round number
-        f"cc_{run}_round_0_extra",     # trailing junk
-        f"PR_{run}_round_0",           # case matters
-        f"kwpr_edges_{run}x",          # trailing junk
-        "user_data.parquet",
-        "docs",
-        f"pr_{run}",                   # no round suffix
-    ):
-        assert not _ROUND_DIR_RE.match(bad), bad

@@ -365,23 +365,6 @@ def test_corpus_datacard_values_and_plan(spark):
     assert "Window" not in plan and "Join" not in plan
 
 
-def test_corpus_datacard_approx_mode(spark):
-    from ddataframeoperation_spark.operators import text as TX
-
-    rows = [(i, "en", "web", "tok " * (i + 1)) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, source string, text string")
-    exact = TX.corpus_datacard(df).collect()[0]
-    approx = TX.corpus_datacard(df, approx=True).collect()[0]
-    # Sketch-mode keeps every non-quantile column bit-identical and its
-    # quantiles within the default accuracy's rank error (here: exact,
-    # since 40 rows fit one sketch).
-    assert approx["n_docs"] == exact["n_docs"] == 40
-    assert approx["total_tokens"] == exact["total_tokens"]
-    assert abs(approx["p50_tokens"] - exact["p50_tokens"]) <= 1.0
-    assert abs(approx["p90_tokens"] - exact["p90_tokens"]) <= 1.0
-    assert approx["mean_repetition"] == exact["mean_repetition"]
-
-
 def test_corpus_datacard_null_text_contract(spark):
     from ddataframeoperation_spark.operators import text as TX
 

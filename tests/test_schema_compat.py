@@ -40,6 +40,47 @@ def test_unknown_type_falls_back_to_string():
     assert st.fields[0].dataType == T.StringType()
 
 
+def test_parenthesised_types_keep_every_column_typed(spark, tmp_path):
+    # A comma inside decimal(12,2) or map<string,int> is not a column
+    # boundary: splitting there shifted every later column onto its
+    # neighbour's type, and a string column typed bigint loads as NULL.
+    st = schema_from_metadata(
+        "amt, qty, note, m", "decimal(12,2), bigint, string, map<string,int>"
+    )
+    assert st.simpleString() == (
+        "struct<amt:decimal(12,2),qty:bigint,note:string,m:map<string,int>>"
+    )
+    path = str(tmp_path / "node_out")
+    spark.createDataFrame(
+        [("12.50", "3", "hello")], "amt string, qty string, note string"
+    ).write.csv(path)
+    cat = compat.perform_load_data(
+        spark,
+        table_specs=[
+            {
+                "TABLE_NAME": "from_metadata",
+                "DataLocation": path,
+                "Format": "csv",
+                "MetaData": "amt, qty, note",
+                "MetaDataType": "decimal(12,2), bigint, string",
+            },
+            {
+                "TABLE_NAME": "from_columns",
+                "DataLocation": path,
+                "Format": "csv",
+                "ColumnList": [
+                    {"MappedAliasName": "amt", "DataType": "decimal(12,2)"},
+                    {"MappedAliasName": "qty", "DataType": "bigint"},
+                    {"MappedAliasName": "note", "DataType": "string"},
+                ],
+            },
+        ],
+    )
+    for name in ("from_metadata", "from_columns"):
+        row = cat[name].collect()[0]
+        assert (str(row["amt"]), row["qty"], row["note"]) == ("12.50", 3, "hello")
+
+
 def test_final_output_csv_and_manifest(spark, tmp_path):
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id int, name string")
     statuses = []

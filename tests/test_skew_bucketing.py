@@ -1,4 +1,4 @@
-"""Skew toolkit tests: salted agg/join equivalence, bucketed join layout."""
+"""Skew toolkit tests: salted aggregation equivalence, AQE skew-join splits."""
 
 from __future__ import annotations
 
@@ -26,23 +26,6 @@ def test_salted_agg_equals_plain(spark, sf_dir):
         ).collect()
     }
     assert salted == plain
-
-
-def test_salted_join_equals_plain(spark, sf_dir):
-    o = read_fixture_table(spark, sf_dir, "orders")
-    c = read_fixture_table(spark, sf_dir, "customer")
-    plain = (
-        o.join(c, on=o["o_custkey"] == c["c_custkey"])
-        .groupBy()
-        .agg(F.count("*").alias("n"), F.sum("o_totalprice").alias("s"))
-        .head()
-    )
-    salted_j = skew.salted_join(o, c, "o_custkey", "c_custkey", salt_buckets=8)
-    got = salted_j.groupBy().agg(
-        F.count("*").alias("n"), F.sum("o_totalprice").alias("s")
-    ).head()
-    assert got["n"] == plain["n"]
-    assert abs(got["s"] - plain["s"]) < 1e-6
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
@@ -88,93 +71,3 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    e = read_fixture_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_by_type")
-    skew.write_partitioned(e, path, ["event_type"])
-    back = spark.read.parquet(path)
-    q = back.filter(F.col("event_type") == "purchase")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "event_type" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0]
-    assert q.count() == e.filter(F.col("event_type") == "purchase").count()
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    o = read_fixture_table(spark, sf_dir, "orders")
-    c = read_fixture_table(spark, sf_dir, "customer")
-    skew.write_bucketed(o, "orders_b", ["o_custkey"], num_buckets=8)
-    skew.write_bucketed(c, "cust_b", ["c_custkey"], num_buckets=8)
-    ob = skew.bucketed_table(spark, "orders_b")
-    cb = skew.bucketed_table(spark, "cust_b")
-    # Disable auto-broadcast so the join would normally need a shuffle.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = ob.join(cb, on=ob["o_custkey"] == cb["c_custkey"])
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() == o.join(c, o["o_custkey"] == c["c_custkey"]).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS cust_b")
-
-
-def _file_ranges(path, col):
-    """Per-file (min, max) of a column from the parquet footers."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        lo = min(md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups))
-        hi = max(md.row_group(g).column(idx).statistics.max for g in range(md.num_row_groups))
-        out.append((lo, hi))
-    return out
-
-
-def test_zorder_layout_skips_on_both_dimensions(spark, sf_dir, tmp_path):
-    from ddataframeoperation_spark.operators.skew import write_zordered
-
-    events = read_fixture_table(spark, sf_dir, "events")
-    zpath = str(tmp_path / "ev_z")
-    write_zordered(events, zpath, ["user_id", "value"], n_files=8)
-
-    # Round-trip is lossless.
-    back = spark.read.parquet(zpath)
-    assert back.count() == events.count()
-    assert {r["event_id"] for r in back.select("event_id").collect()} == {
-        r["event_id"] for r in events.select("event_id").collect()
-    }
-
-    # Data-skipping effectiveness straight from the parquet footers: for a
-    # point predicate on EITHER clustered dimension, most files' [min,max]
-    # interval must exclude it. An unclustered layout leaves every file's
-    # range ~ the full domain (0 files skippable).
-    stats = events.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).head()
-    u_probe = (stats[0] + stats[1]) // 2
-    v_probe = (stats[2] + stats[3]) / 2
-    u_ranges = _file_ranges(zpath, "user_id")
-    v_ranges = _file_ranges(zpath, "value")
-    assert len(u_ranges) >= 4
-    u_skipped = sum(1 for lo, hi in u_ranges if not (lo <= u_probe <= hi))
-    v_skipped = sum(1 for lo, hi in v_ranges if not (lo <= v_probe <= hi))
-    assert u_skipped >= len(u_ranges) // 2
-    assert v_skipped >= len(v_ranges) // 2
-
-    plain_path = str(tmp_path / "ev_plain")
-    events.repartition(8).write.parquet(plain_path)
-    plain_skipped = sum(
-        1
-        for lo, hi in _file_ranges(plain_path, "user_id")
-        if not (lo <= u_probe <= hi)
-    )
-    assert plain_skipped == 0  # the unclustered baseline skips nothing
